@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.GraftShim.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -143,13 +144,6 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
 }
 
 object CharEntropy {
-  /** Register `char_entropy` in the session's function registry (Spark 4's
-    * Column no longer exposes raw Expressions). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs.head), "built-in")
-
-  /** Column-API entry: charEntropy(strCol); requires register() first. */
-  def charEntropy(str: Column): Column =
-    org.apache.spark.sql.functions.call_function("char_entropy", str)
+  /** Column-API entry: charEntropy(strCol). */
+  def charEntropy(str: Column): Column = column(CharEntropy(expression(str)))
 }

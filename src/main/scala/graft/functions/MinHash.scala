@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.GraftShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 
@@ -127,13 +128,7 @@ case class MinHashSig(child: Expression, numHashes: Int)
 }
 
 object MinHashSig {
-  /** Register `minhash_sig` (fixed signature width `numHashes`) in the
-    * session's function registry. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession, numHashes: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head, numHashes), "built-in")
-
-  /** Column-API entry: minhash_sig(tokensCol); requires register() first. */
-  def minhashSig(tokens: Column): Column =
-    org.apache.spark.sql.functions.call_function("minhash_sig", tokens)
+  /** Column-API entry: minhash_sig(tokensCol), `numHashes` wide. */
+  def minhashSig(tokens: Column, numHashes: Int): Column =
+    column(MinHashSig(expression(tokens), numHashes))
 }

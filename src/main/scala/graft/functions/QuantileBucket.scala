@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.GraftShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Bucket index of a double against a FOLDABLE sorted boundary array:
@@ -74,49 +75,9 @@ case class QuantileBucket(left: Expression, right: Expression)
 }
 
 object QuantileBucket {
-  /** Registry name: internal plumbing for `cluster(binning='quantile')`,
-    * NOT a user-facing function — the double-underscore sentinel makes a
-    * collision with a user temp function practically impossible, and
-    * [[deregister]] removes it once the rewrite's plan is analyzed so
-    * nothing leaks into the session afterwards. (Spark 4's Column no
-    * longer exposes raw Expressions, so the registry is the only public
-    * path from an Expression to a Column.) */
-  val InternalName = "__graft_bucket_internal__"
-
-  // register/deregister pairs are refcounted UNDER ONE LOCK: concurrent
-  // cluster() calls share one session registry, and both an
-  // unconditional drop AND a bare atomic counter leave a window where a
-  // finisher observes count==0, a starter re-registers, and the
-  // finisher's drop then yanks the function out from under the
-  // starter's still-analyzing plan — count mutation and registry
-  // mutation must be one atomic step
-  private var registrations = 0
-
-  /** Register the internal binning function. Idempotent; pairs with
-    * [[deregister]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    registrations += 1
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      InternalName, {
-        case Seq(v, bounds) => QuantileBucket(v, bounds)
-        case other => throw new IllegalArgumentException(
-          s"graft_bucket expects (value, bounds), got ${other.size} argument(s)")
-      }, "built-in")
-  }
-
-  /** Drop the internal registration once the LAST in-flight consumer is
-    * done (analysis resolves the name eagerly inside the rewrite, so a
-    * finished caller's plan no longer needs it). */
-  def deregister(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    registrations = math.max(0, registrations - 1)
-    if (registrations == 0)
-      spark.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(InternalName))
-  }
-
-  /** Column-API entry: bucket(value, boundsLiteral); requires
-    * register() first. Null values bucket to 0 via the outer coalesce
-    * at the call site (BinaryExpression null-propagates). */
+  /** Column-API entry: bucket(value, boundsLiteral). Null values bucket
+    * to 0 via the outer coalesce at the call site (BinaryExpression
+    * null-propagates). */
   def bucket(value: Column, bounds: Column): Column =
-    org.apache.spark.sql.functions.call_function(InternalName, value, bounds)
+    column(QuantileBucket(expression(value), expression(bounds)))
 }

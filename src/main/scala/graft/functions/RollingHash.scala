@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.GraftShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Rabin–Karp-style rolling fingerprint of a token sequence.
@@ -68,10 +68,6 @@ case class RollingHash64(child: Expression)
 }
 
 object RollingHash64 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash64", exprs => RollingHash64(exprs.head), "built-in")
-
   def rollingHash64(tokens: Column): Column =
-    org.apache.spark.sql.functions.call_function("rolling_hash64", tokens)
+    column(RollingHash64(expression(tokens)))
 }

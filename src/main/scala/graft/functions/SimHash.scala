@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.GraftShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -84,16 +85,8 @@ case class SimHash64(child: Expression)
 }
 
 object SimHash64 {
-  /** Register `simhash64` in the session's function registry (Spark 4's
-    * Column no longer exposes raw Expressions, so custom expressions are
-    * reached through the registry + call_function). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-
-  /** Column-API entry: simhash64(tokensCol); requires register() first. */
-  def simhash64(tokens: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash64", tokens)
+  /** Column-API entry: simhash64(tokensCol). */
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 
   /** Hamming distance between two 64-bit fingerprints as a Column expr. */
   def hamming64(a: Column, b: Column): Column = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -26,7 +26,7 @@ object WeightedAvg {
       def outputEncoder: Encoder[Double] = Encoders.scalaDouble
     }
 
-  /** Register as `graft_weighted_avg(value, weight)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("graft_weighted_avg", udaf(agg))
+  /** Column-API entry: weightedAvg(value, weight). */
+  def weightedAvg(value: Column, weight: Column): Column =
+    udaf(agg).apply(value, weight)
 }

@@ -2571,23 +2571,11 @@ object FormatOps {
         "rewrite by the bucket column, which would undo the z-order; " +
         "cluster a non-bucketed table, or drop the bucket layout first")
     var touched = false
-    // quantile binning registers an internal temp function; deregister it
-    // once the rewrite (which analyzes the plan eagerly) is done so the
-    // session registry is left exactly as we found it. Pairing is exact:
-    // the closure may never register (single column, table not matched),
-    // and may register MORE than once (a retrying rewrite path replaying
-    // the transform) — count every acquire and release the same number,
-    // so the refcount in QuantileBucket returns to where it started and
-    // CONCURRENT cluster() calls never drop the function under each other
-    var bucketRegs = 0
-    try {
     graft.sources.Generations.rewrite(s, dir, (name, df) =>
       if (name != table) df
       else {
         touched = true
-        val (shaped, reg) = clusterShape(s, df, cols, binning, targetFiles)
-        if (reg) bucketRegs += 1
-        shaped
+        clusterShape(df, cols, binning, targetFiles)
       }, targetFiles = None, writeOptions = writeOptions, rowChurning = false,
       // record the clustering INSIDE the staging dir so it publishes
       // atomically with the generation it describes — written after the
@@ -2606,29 +2594,23 @@ object FormatOps {
             clusterFileNames(fs, staging))
         }
       })
-    } finally {
-      while (bucketRegs > 0) { graft.functions.QuantileBucket.deregister(s); bucketRegs -= 1 }
-    }
     require(touched, s"table '$table' not found in $dir; nothing was clustered")
   }
 
   /** The z-key shaping shared by the full [[cluster]] rewrite and the
     * incremental merge ([[clusterIncremental]]): single column → exact
     * range sort; 2-4 columns → Morton interleave of per-column bucket
-    * indices (uniform width_bucket or codegen'd quantile binning).
-    * Returns (shaped df, whether QuantileBucket was registered — the
-    * CALLER deregisters after its consuming plan executed). */
-  private def clusterShape(s: SparkSession, df: DataFrame, cols: Seq[String],
-      binning: String, targetFiles: Int): (DataFrame, Boolean) = {
+    * indices (uniform width_bucket or codegen'd quantile binning). */
+  private def clusterShape(df: DataFrame, cols: Seq[String],
+      binning: String, targetFiles: Int): DataFrame = {
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"cluster on unknown columns: ${missing.mkString(",")}")
     if (cols.size == 1) {
       // single column: exact sort clustering, no z-curve needed
-      (df.repartitionByRange(targetFiles, col(cols.head))
-        .sortWithinPartitions(col(cols.head)), false)
+      df.repartitionByRange(targetFiles, col(cols.head))
+        .sortWithinPartitions(col(cols.head))
     } else {
       val n = cols.size
-      var registered = false
       val buckets = if (binning == "quantile") {
         // one column-pruned pass for all boundary arrays; nulls are
         // ignored by approxQuantile and bucket to 0 via the coalesce.
@@ -2648,8 +2630,6 @@ object FormatOps {
         // Pruning and correctness are unaffected: bins only need to be
         // sorted and roughly even — every file still covers a bounded
         // key range, and the rewrite reorders rows, never changes them.
-        graft.functions.QuantileBucket.register(s)
-        registered = true
         val casted = cols.map(c => col(c).cast("double").as(c))
         val probs = (1 until 256).map(_.toDouble / 256).toArray
         val sampleCap = 4L << 20
@@ -2699,10 +2679,10 @@ object FormatOps {
           shiftleft(shiftright(b, k).bitwiseAND(lit(1L)), k * n + i)
         }
       }.reduce(_ + _)
-      (df.withColumn("__z", z)
+      df.withColumn("__z", z)
         .repartitionByRange(targetFiles, col("__z"))
         .sortWithinPartitions(col("__z"))
-        .drop("__z"), registered)
+        .drop("__z")
     }
   }
 
@@ -2767,28 +2747,17 @@ object FormatOps {
     require(graft.sources.GraftDataSource.readBucketMarker(conf, dir, table).isEmpty,
       s"table '$table' is bucketed — clustering and bucketing prescribe " +
         "conflicting layouts (same refusal as the full cluster)")
-    var drift = 0
-    var regs = 0
-    try {
-      drift = graft.sources.Generations.rewriteFiles(s, dir, table,
-        p => !members.contains(p.getName),
-        (df, nDrift) => {
-          val (shaped, r) = clusterShape(s, df, cols, binning, math.max(nDrift, 1))
-          if (r) regs += 1
-          shaped
-        },
-        beforePublish = (conf2, staging, carriedNames) => {
-          val fs = staging.getFileSystem(conf2)
-          // new record: carried members that are still live + the drift
-          // replacements this rewrite just staged — the count equals the
-          // post-publish listing, so DESCRIBE reports 'clustered' again
-          writeClusterSpec(conf2, staging, cols, binning0, table,
-            (carriedNames ++ clusterFileNames(fs, staging)).sorted)
-        }).size
-    } finally {
-      while (regs > 0) { graft.functions.QuantileBucket.deregister(s); regs -= 1 }
-    }
-    drift
+    graft.sources.Generations.rewriteFiles(s, dir, table,
+      p => !members.contains(p.getName),
+      (df, nDrift) => clusterShape(df, cols, binning, math.max(nDrift, 1)),
+      beforePublish = (conf2, staging, carriedNames) => {
+        val fs = staging.getFileSystem(conf2)
+        // new record: carried members that are still live + the drift
+        // replacements this rewrite just staged — the count equals the
+        // post-publish listing, so DESCRIBE reports 'clustered' again
+        writeClusterSpec(conf2, staging, cols, binning0, table,
+          (carriedNames ++ clusterFileNames(fs, staging)).sorted)
+      }).size
   }
 
   // ---- q98: z-order clustering preserves content, prunes both dims ----------

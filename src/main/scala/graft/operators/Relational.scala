@@ -611,11 +611,10 @@ object Relational {
 
   // ---- q26: typed UDAF (Aggregator) — weighted average ---------------------
   private val q26: Q = (s, d) => {
-    graft.functions.WeightedAvg.register(s)
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(round(
-        call_function("graft_weighted_avg", col("l_extendedprice"), col("l_quantity")),
+        graft.functions.WeightedAvg.weightedAvg(col("l_extendedprice"), col("l_quantity")),
         4).as("wavg_price"))
       .orderBy(col("l_returnflag"))
   }

@@ -31,12 +31,10 @@ object Similarity {
   /** Corpus with the L2 norm computed ONCE per vector, before any join —
     * recomputing norms inside an N×K pair join costs 2 extra dot
     * products per pair. */
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorOps.register(s)
+  private def emb(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .withColumn("v", col("embedding").cast("array<double>"))
       .withColumn("nv", sqrt(graft.functions.VectorOps.dot(col("v"), col("v"))))
-  }
 
   // ---- q40: brute-force cosine top-10 vs one probe vector -----------------
   private val q40: Q = (s, d) => {
@@ -74,7 +72,6 @@ object Similarity {
   // 100 TB that is the difference between a 50 TB and a 100 TB
   // vector-scan per curation pass.
   private val q153: Q = (s, d) => {
-    graft.functions.VectorOps.register(s)
     val dir = FormatOps.graftDir(d, "float_vectors")
     Tables.embeddings(s, d)
       .write.format("graft").mode("overwrite").save(dir)
@@ -463,7 +460,6 @@ object Similarity {
     * cadence stays an offline policy knob — the standard IVF trade.
     * `batch` needs (vec_id, v: array<double>, nv). */
   def ivfAppend(s: SparkSession, indexRoot: String, batch: DataFrame): Unit = {
-    graft.functions.VectorOps.register(s)
     val cents = s.read.format("graft").load(s"$indexRoot/centroids")
     rankCells(batch.select(col("vec_id"), col("v"), col("nv")), cents, k = 1)
       .select(col("vec_id"), col("v"), col("nv"), col("cell"))
@@ -525,7 +521,6 @@ object Similarity {
     * plus one dynamic-partition write — never a pairwise join. */
   def ivfReindex(s: SparkSession, indexRoot: String, nCells: Int): Unit = {
     require(nCells >= 1 && nCells <= (1 << 16), s"bad cell count $nCells")
-    graft.functions.VectorOps.register(s)
     val all = s.read.format("graft").load(s"$indexRoot/cells")
       .select(col("vec_id"), col("v"), col("nv"))
     val seeds = centroidsOf(

@@ -181,10 +181,9 @@ object TextOps {
     * shuffles: no per-shingle rows, no exchange to regroup them; the LSH
     * banding join downstream is the first exchange the pipeline pays. */
   private[operators] def minhashSigsOf(corpus: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(corpus.sparkSession, NumHashes)
     corpus.filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
-        graft.functions.MinHashSig.minhashSig(col("toks")).as("sig"))
+        graft.functions.MinHashSig.minhashSig(col("toks"), NumHashes).as("sig"))
   }
 
   /** One row per (doc, band): the band's signature rows hashed to a
@@ -400,7 +399,6 @@ object TextOps {
   // Both checks run per planted doc across all partitions, so they also
   // gate expression determinism under distribution.
   private val q36: Q = (s, d) => {
-    SimHash64.register(s)
     val planted = docsWithTokens(s, d)
       .filter(col("doc_id") % 20 === 0 && size(col("toks")) > 0)
       .withColumn("h_orig", SimHash64.simhash64(col("toks")))
@@ -554,7 +552,6 @@ object TextOps {
   //    hash DIFFERENT up to a 2^-64 collision. "Non-palindromic" is
   //    computable in plain SQL, so DuckDB can predict the exact count.
   private val q38b: Q = (s, d) => {
-    graft.functions.RollingHash64.register(s)
     val rh: Column => Column = graft.functions.RollingHash64.rollingHash64
     val planted = docsWithTokens(s, d)
       .filter(col("doc_id") % 20 === 0)
@@ -1723,7 +1720,6 @@ object TextOps {
   // documents (the regex produced zero rows for them). Oracle SQL is
   // unchanged — same char semantics, same rounding.
   private val q120: Q = (s, d) => {
-    graft.functions.CharEntropy.register(s)
     val ent = Tables.documents(s, d)
       .select(col("lang"),
         round(graft.functions.CharEntropy.charEntropy(lower(col("text"))), 6).as("h"))

@@ -1,15 +1,15 @@
 package graft.sources
 
 /** Opt-in micro-profiler for the commit/maintenance path (enable with
-  * `-Dgraft.profile=true`; a single static boolean check when off). The
+  * `-Dgraft.profile=true`; a single boolean check when off). The
   * CDC/maintenance gates' cost is dominated by PER-COMMIT fixed work —
   * listings, manifest folds, sidecar round-trips, pointer swaps — that
   * no Spark UI metric attributes; this accumulates wall time per labeled
-  * phase across commits so `ProfileCommit` can print an attribution
+  * phase across commits so `Harness profile` can print an attribution
   * table instead of guessing. Driver-side only (every timed phase runs
   * on the driver), so a ConcurrentHashMap is plenty. */
 object Prof {
-  val enabled: Boolean = java.lang.Boolean.getBoolean("graft.profile")
+  @volatile var enabled: Boolean = java.lang.Boolean.getBoolean("graft.profile")
   private val acc =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 

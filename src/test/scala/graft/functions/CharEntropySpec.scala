@@ -52,7 +52,6 @@ class CharEntropySpec extends SparkSpec {
   test("agrees with the explode-based plan end-to-end, codegen path") {
     val spk = spark
     import spk.implicits._
-    CharEntropy.register(spark)
     val df = Seq(
       (1L, "the quick brown fox"),
       (2L, "AAAA aaaa"),       // lower() folds these together

@@ -8,7 +8,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("simhash64 is deterministic, order-insensitive for bags, null-aware") {
     import spark.implicits._
-    SimHash64.register(spark)
     val df = Seq(
       (1L, Seq("the", "quick", "brown", "fox")),
       (2L, Seq("fox", "brown", "quick", "the")), // same bag, different order
@@ -34,8 +33,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("simhash64 and rolling_hash64 agree across codegen and interpreted paths") {
     import spark.implicits._
-    SimHash64.register(spark)
-    RollingHash64.register(spark)
     val df = Seq(
       (1L, Seq("a", "b", "c")),
       (2L, Seq("c", "b", "a")), // rolling hash must differ (order-sensitive)
@@ -61,7 +58,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("graft_dot matches manual dot product in both eval paths") {
     import spark.implicits._
-    VectorOps.register(spark)
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
       (Array(0.0, 0.0), Array(1.0, 1.0)),
@@ -83,7 +79,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("graft_dot float32: cast-free fold is bit-equal to the double cast") {
     import spark.implicits._
-    VectorOps.register(spark)
     // values NOT exactly representable in binary32 would differ between
     // f32 and f64 STORAGE — the equality pinned here is cast-freeness:
     // dot(float_array) == dot(cast(float_array AS double)), bit-for-bit
@@ -118,13 +113,57 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_weighted_avg matches the SQL formulation") {
-    WeightedAvg.register(spark)
     val df = spark.range(1, 1000).selectExpr(
       "id % 7 AS g", "cast(id AS double) AS v", "cast(id % 13 + 1 AS double) AS w")
     val got = df.groupBy(col("g"))
-      .agg(round(call_function("graft_weighted_avg", col("v"), col("w")), 9).as("wa"))
+      .agg(round(WeightedAvg.weightedAvg(col("v"), col("w")), 9).as("wa"))
     val want = df.groupBy(col("g"))
       .agg(round(sum(col("v") * col("w")) / sum(col("w")), 9).as("wa"))
     assert(canon(got) == canon(want))
+  }
+
+  test("every native Column entry runs in a fresh session without touching its registry") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val toks = Seq("the", "quick", "brown", "fox")
+    val lit64 = (e: org.apache.spark.sql.catalyst.expressions.Expression) =>
+      e.eval(null).asInstanceOf[Long]
+    val toksLit = Literal.create(toks, ArrayType(StringType))
+    val row = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0), toks, "aabb", 5.0))
+      .toDF("a", "b", "toks", "text", "x")
+      .select(
+        VectorOps.dot(col("a"), col("b")),
+        SimHash64.simhash64(col("toks")),
+        RollingHash64.rollingHash64(col("toks")),
+        MinHashSig.minhashSig(col("toks"), 4),
+        array((0 until 4).map(i => xxhash64(lit(i), lit("the quick brown"))): _*),
+        array((0 until 4).map(i => xxhash64(lit(i), lit("quick brown fox"))): _*),
+        CharEntropy.charEntropy(col("text")),
+        QuantileBucket.bucket(col("x"), typedLit(Seq(1.0, 4.0, 9.0))))
+      .head()
+    assert(row.getDouble(0) == 32.0)
+    assert(row.getLong(1) == lit64(SimHash64(toksLit)))
+    assert(row.getLong(2) == lit64(RollingHash64(toksLit)))
+    val shingles = Seq(row.getSeq[Long](4), row.getSeq[Long](5))
+    assert(row.getSeq[Long](3) == (0 until 4).map(i => shingles.map(_(i)).min))
+    assert(math.abs(row.getDouble(6) - math.log(2)) < 1e-12)
+    assert(row.getLong(7) == 2L)
+    val wa = Seq((1.0, 1.0), (3.0, 3.0)).toDF("v", "w")
+      .agg(WeightedAvg.weightedAvg(col("v"), col("w"))).head().getDouble(0)
+    assert(wa == 2.5)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-fresh-cluster").toString
+    val data = fresh.range(0, 5000).selectExpr("id", "id % 97 AS x", "(id * 31) % 101 AS y")
+    data.write.format("graft").mode("overwrite").save(dir)
+    graft.operators.FormatOps.cluster(fresh, dir, "data", Seq("x", "y"),
+      targetFiles = 2, binning = "quantile")
+    assert(canon(fresh.read.format("graft").load(dir)) == canon(data))
+
+    val leaked = fresh.sessionState.functionRegistry.listFunction().map(_.funcName)
+      .filter(n => n.startsWith("graft_") || Set("minhash_sig", "simhash64",
+        "rolling_hash64", "char_entropy", "__graft_bucket_internal__")(n))
+    assert(leaked.isEmpty, s"native functions leaked into the registry: $leaked")
   }
 }

@@ -29,9 +29,8 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   private def exprSigs(df: org.apache.spark.sql.DataFrame) = {
-    MinHashSig.register(spark, N)
     df.filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), MinHashSig.minhashSig(col("toks")).as("sig"))
+      .select(col("doc_id"), MinHashSig.minhashSig(col("toks"), N).as("sig"))
   }
 
   test("expression signature equals the explode/groupBy SQL construction") {
@@ -61,7 +60,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("whole-stage codegen stays intact and agrees with interpreted eval") {
-    MinHashSig.register(spark, N)
     // through a REAL source scan: a local relation would be folded by
     // ConvertToLocalRelation and never reach codegen at all
     val dir = java.nio.file.Files.createTempDirectory("graft-mh-cg").toString + "/t"
@@ -72,7 +70,7 @@ class MinHashSigSpec extends SparkSpec {
       (4L, null.asInstanceOf[Seq[String]])
     ).toDF("doc_id", "toks").write.parquet(dir)
     val df = spark.read.parquet(dir)
-    val q = df.select(col("doc_id"), MinHashSig.minhashSig(col("toks")).as("sig"))
+    val q = df.select(col("doc_id"), MinHashSig.minhashSig(col("toks"), N).as("sig"))
     // the whole point of dropping CodegenFallback: the projection stage
     // containing the expression must BE a WholeStageCodegen stage
     val plan = q.queryExecution.executedPlan
@@ -86,7 +84,7 @@ class MinHashSigSpec extends SparkSpec {
     val interpreted = try {
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      canon(df.select(col("doc_id"), MinHashSig.minhashSig(col("toks")).as("sig")))
+      canon(df.select(col("doc_id"), MinHashSig.minhashSig(col("toks"), N).as("sig")))
     } finally {
       spark.conf.unset("spark.sql.codegen.wholeStage")
       spark.conf.unset("spark.sql.codegen.factoryMode")

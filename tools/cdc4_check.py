@@ -5,7 +5,7 @@ The solo sum of the four CDC-heavy gates (q113 change-feed relay, q114
 incremental view fold, q118 replica fold, q134 IVF reindex) is the
 canary that caught three rounds of per-commit machinery accretion. This
 makes it self-enforcing instead of verdict-enforced: run the four gates
-solo via graft.BenchOne (min of runs 2-3; run1 carries session warmup),
+solo via `graft.Harness solo` (min of runs 2-3; run1 carries session warmup),
 sum the wall minima, FAIL (exit 1) if the sum exceeds the bar.
 
 Honest refusal: if the 1-min loadavg at start is >= 3 the number is
@@ -15,7 +15,7 @@ Box-speed normalization (r16): the same code read 11.9 s on the r16
 session-1 box and 14.6-18.0 s on the session-2 box (min-of-3, loadavg
 <= 1.1, older code slower in the same-day A/B - box speed, not code).
 Absolute bars don't transfer across boxes, so the run now also times
-BenchOne's `calibrate` pseudo-gate (a fixed spark.range -> xxhash64
+the solo mode's `calibrate` pseudo-gate (a fixed spark.range -> xxhash64
 -> hash-aggregate shuffle, no table I/O; ~3 s on the reference box)
 and judges wall_sum * (CALIB_REF / calib): a
 box that runs the calibration 20% slower is allowed a 20% slower CDC4.
@@ -69,7 +69,7 @@ def main():
     mins = {}
     for _ in range(2):
         out = subprocess.run(
-            ["sbt", "-batch", f"runMain graft.BenchOne calibrate,{GATES} {sf}"],
+            ["sbt", "-batch", f"runMain graft.Harness solo calibrate,{GATES} {sf}"],
             capture_output=True, text=True, cwd=REPO).stdout
         got = {m.group(1): (float(m.group(2)), float(m.group(3)), float(m.group(4)))
                for m in re.finditer(
