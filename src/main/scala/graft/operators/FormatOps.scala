@@ -817,9 +817,9 @@ object FormatOps {
 
   /** `DESCRIBE HISTORY`: the table's generations as a DataFrame — one
     * row per generation still on disk with its index, live flag, birth
-    * timestamp (`.swap-ts`), idempotency tag (`.rewrite-tag`), file
-    * count and bytes. Metadata-only (a directory listing plus two tiny
-    * marker reads per generation, never data); superseded generations
+    * timestamp and idempotency tag (from the generation's record), file
+    * count and bytes. Metadata-only (a directory listing plus one record
+    * read per generation, never data); superseded generations
     * appear until the sweep reclaims them, which is exactly the
     * time-travel horizon a `VERSION AS OF` reader wants to see. */
   def history(s: SparkSession, dir: String): DataFrame = {
@@ -1854,16 +1854,14 @@ object FormatOps {
       graft.sources.GraftDataSource.readGenPointer(conf, dir)).getOrElse(return None)
     def side(genName: String): (Map[String, (org.apache.hadoop.fs.Path, Long)],
         Map[String, String]) = {
-      val genDir = new org.apache.hadoop.fs.Path(root, genName)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(genDir,
-          graft.sources.GraftDataSource.SwapTsName))) throw new IllegalStateException(
-        s"$genName not addressable")
+      val record = graft.sources.GenerationRecord.read(conf,
+          new org.apache.hadoop.fs.Path(root, genName))
+        .getOrElse(throw new IllegalStateException(s"$genName not addressable"))
       val listed = graft.sources.GraftDataSource
         .listGenerationSized(conf, dir, genName)
         .map { case (p, size, _) =>
           graft.sources.GraftDataSource.relativePath(root, p) -> (p, size) }.toMap
-      val dvs = graft.sources.GraftDataSource.readDvManifest(fs, genDir)
-        .map { case (_, rel, dvRel, _) => rel -> dvRel }.toMap
+      val dvs = record.deleteVectors.map(d => d.file -> d.blob).toMap
       (listed, dvs)
     }
     val (aFiles, aDvs) = side(fromName)
@@ -2168,12 +2166,7 @@ object FormatOps {
       s.sql(s"DELETE FROM graft_mat.db.orders WHERE o_orderkey < $cut AND o_orderkey % 2 = 0")
       s.sql("DELETE FROM graft_mat.db.orders WHERE o_orderkey % 97 = 3")
     } finally s.conf.set("spark.graft.deleteMode", "copy-on-write")
-    def dvEntries(): Seq[Long] = {
-      val resolved = graft.sources.GraftDataSource.resolveDataDir(conf, dir)
-      graft.sources.GraftDataSource.readDvManifest(
-        new org.apache.hadoop.fs.Path(resolved).getFileSystem(conf),
-        new org.apache.hadoop.fs.Path(resolved)).map(_._4)
-    }
+    def dvEntries(): Seq[Long] = liveDvEntries(conf, dir).map(_.cardinality)
     require(dvEntries().nonEmpty, "q161: the deletes must leave vectors")
     // targeted pass: only the heavily-deleted low-range file(s) qualify
     // threshold with wide margins on both sides: the heavy file's live
@@ -2577,23 +2570,15 @@ object FormatOps {
         touched = true
         clusterShape(df, cols, binning, targetFiles)
       }, targetFiles = None, writeOptions = writeOptions, rowChurning = false,
-      // record the clustering INSIDE the staging dir so it publishes
-      // atomically with the generation it describes — written after the
-      // data, counted from the staging's own output (every live file at
-      // birth is the rewrite's), so a concurrent append or compact can
-      // neither inflate the recorded count nor steal the record into a
-      // generation this rewrite never produced (see
-      // GraftDataSource.ClusterSpecName)
-      beforePublish = Some { (conf, staging) =>
-        // `touched` is set by the transform, which ran during the table
-        // writes above this hook; an unknown table publishes NO claim
-        // (the require below then fails the call loudly)
-        if (touched) {
-          val fs = staging.getFileSystem(conf)
-          writeClusterSpec(conf, staging, cols, binning, table,
-            clusterFileNames(fs, staging))
-        }
-      })
+      // the claim rides the generation's record, so it publishes
+      // atomically with the data it describes — its members are the
+      // rewrite's own output (every live file at birth), so a concurrent
+      // append or compact can neither inflate the membership nor steal
+      // the claim into a generation this rewrite never produced.
+      // `touched` is set by the transform, which ran during the table
+      // writes before this is evaluated; an unknown table publishes NO
+      // claim (the require below then fails the call loudly)
+      cluster = if (touched) Some(clusterClaim(cols, binning, table, Nil)) else None)
     require(touched, s"table '$table' not found in $dir; nothing was clustered")
   }
 
@@ -2686,35 +2671,14 @@ object FormatOps {
     }
   }
 
-  /** Names of every staged `.graft` file — the clustered-set membership
-    * list the incremental recluster diffs the live listing against. */
-  private def clusterFileNames(fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path): Seq[String] = {
-    val names = Seq.newBuilder[String]
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (n.endsWith(".graft")) names += n
-    }
-    names.result().sorted
-  }
-
-  private def writeClusterSpec(conf: org.apache.hadoop.conf.Configuration,
-      staging: org.apache.hadoop.fs.Path, cols: Seq[String], binning: String,
-      table: String, names: Seq[String]): Unit =
-    graft.sources.AtomicPublish.text(conf,
-      new org.apache.hadoop.fs.Path(staging,
-        graft.sources.GraftDataSource.ClusterSpecName),
-      // a single column is an exact sort — recording the binning
-      // mode would name machinery that never ran. Lines 5+ are the
-      // member file NAMES (newer records only): what lets an
-      // incremental recluster identify drift without any per-file I/O.
-      // An EMPTY member list still writes its sentinel line ("-", never
-      // a legal file name) — a 4-line record means pre-name-tracking
-      // vintage, and an empty-table cluster must not read as that
-      s"${cols.mkString(",")}\n${if (cols.size == 1) "sort" else binning}" +
-        s"\n${names.size}\n$table" +
-        (if (names.isEmpty) "\n-" else names.mkString("\n", "\n", "")))
+  /** A clustering claim whose members are `names` plus the files the
+    * publish stages (see Generations.publishStaging). A single column is an
+    * exact sort — recording the binning mode would name machinery that
+    * never ran. */
+  private def clusterClaim(cols: Seq[String], binning: String, table: String,
+      names: Seq[String]): graft.sources.GenerationRecord.Cluster =
+    graft.sources.GenerationRecord.Cluster(cols,
+      if (cols.size == 1) "sort" else binning, table, names)
 
   /** Incremental reclustering for `state=partial` (`CALL sys.cluster(...,
     * incremental => true)`): recluster ONLY the files that postdate the
@@ -2726,38 +2690,27 @@ object FormatOps {
     * than one global order — every file still covers a bounded key
     * range, so zone-map pruning holds; a periodic FULL recluster
     * restores the single tiling when overlap accumulates. Returns the
-    * number of drift files reclustered (0 = nothing to do). Refuses on a
-    * record written before name tracking (run one full cluster first). */
+    * number of drift files reclustered (0 = nothing to do). Refuses
+    * without a clustering claim (run one full cluster first). */
   def clusterIncremental(s: SparkSession, dir: String, table: String): Int = {
     val conf = s.sparkContext.hadoopConfiguration
-    // ONE record read: header + members from the same bytes (two reads
-    // could pair them across a concurrent publish)
-    val (spec, members0) = graft.sources.GraftDataSource.readClusterRecord(conf, dir)
+    val claim = graft.sources.GenerationRecord.live(conf, dir).flatMap(_.cluster)
       .getOrElse(throw new IllegalArgumentException(
         s"no clustering record on $dir — run a full sys.cluster first"))
-    val (colsCsv, binning0, _, recTable) = spec
-    require(recTable == table,
-      s"clustering record on $dir names table '$recTable', not '$table'")
-    val members = members0
-      .getOrElse(throw new IllegalArgumentException(
-        s"the clustering record on $dir predates incremental support " +
-          "(no member file list) — run one full sys.cluster to refresh it"))
-    val cols = colsCsv.split(',').toSeq
-    val binning = if (binning0 == "sort") "uniform" else binning0
+    require(claim.table == table,
+      s"clustering record on $dir names table '${claim.table}', not '$table'")
+    val members = claim.members.toSet
+    val binning = if (claim.binning == "sort") "uniform" else claim.binning
     require(graft.sources.GraftDataSource.readBucketMarker(conf, dir, table).isEmpty,
       s"table '$table' is bucketed — clustering and bucketing prescribe " +
         "conflicting layouts (same refusal as the full cluster)")
     graft.sources.Generations.rewriteFiles(s, dir, table,
       p => !members.contains(p.getName),
-      (df, nDrift) => clusterShape(df, cols, binning, math.max(nDrift, 1)),
-      beforePublish = (conf2, staging, carriedNames) => {
-        val fs = staging.getFileSystem(conf2)
-        // new record: carried members that are still live + the drift
-        // replacements this rewrite just staged — the count equals the
-        // post-publish listing, so DESCRIBE reports 'clustered' again
-        writeClusterSpec(conf2, staging, cols, binning0, table,
-          (carriedNames ++ clusterFileNames(fs, staging)).sorted)
-      }).size
+      (df, nDrift) => clusterShape(df, claim.cols, binning, math.max(nDrift, 1)),
+      // new claim: carried members that are still live + the drift
+      // replacements this rewrite stages — the membership equals the
+      // post-publish listing, so DESCRIBE reports 'clustered' again
+      cluster = carried => Some(clusterClaim(claim.cols, claim.binning, table, carried))).size
   }
 
   // ---- q98: z-order clustering preserves content, prunes both dims ----------
@@ -3547,6 +3500,11 @@ object FormatOps {
       |ORDER BY score DESC, doc_id
       |LIMIT 12""".stripMargin
 
+  /** The live generation's delete-vector entries (the MoR gates' probe). */
+  private def liveDvEntries(conf: org.apache.hadoop.conf.Configuration,
+      dir: String): Seq[graft.sources.GenerationRecord.DvEntry] =
+    graft.sources.GenerationRecord.live(conf, dir).toSeq.flatMap(_.deleteVectors)
+
   // ---- q157: merge-on-read DELETE — delete vectors, zero file rewrites ------
   // Two SQL DELETEs under `spark.graft.deleteMode = merge-on-read`: the
   // matching rows' (_file, _pos) ids flow to position-delete writers and
@@ -3583,11 +3541,8 @@ object FormatOps {
     } finally s.conf.set("spark.graft.deleteMode", "copy-on-write")
     val noRewrite = fileState() == before
     require(noRewrite, "q157: merge-on-read DELETE rewrote or dropped data files")
-    val resolved = graft.sources.GraftDataSource.resolveDataDir(conf, s"$root/db")
-    val dvs = graft.sources.GraftDataSource.readDvManifest(
-      new org.apache.hadoop.fs.Path(resolved).getFileSystem(conf),
-      new org.apache.hadoop.fs.Path(resolved))
-    require(dvs.nonEmpty && dvs.map(_._2).distinct.size == dvs.size,
+    val dvs = liveDvEntries(conf, s"$root/db")
+    require(dvs.nonEmpty && dvs.map(_.file).distinct.size == dvs.size,
       s"q157: expected one merged delete vector per touched file, got $dvs")
     s.table("graft_mor.db.orders")
       .agg(count(lit(1)).as("n_rows"),
@@ -3653,10 +3608,7 @@ object FormatOps {
     val noRewrite = before.forall { case (n, sz) => after.get(n).contains(sz) }
     require(noRewrite && after.size > before.size,
       "q158: MoR UPDATE/MERGE must add replacement files, never rewrite originals")
-    val resolved = graft.sources.GraftDataSource.resolveDataDir(conf, s"$root/db")
-    val dvRows = graft.sources.GraftDataSource.readDvManifest(
-      new org.apache.hadoop.fs.Path(resolved).getFileSystem(conf),
-      new org.apache.hadoop.fs.Path(resolved)).map(_._4).sum
+    val dvRows = liveDvEntries(conf, s"$root/db").map(_.cardinality).sum
     s.table("graft_moru.db.orders")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_orderkey")).as("key_sum"),
@@ -3741,16 +3693,12 @@ object FormatOps {
     } finally Seq("deleteMode", "updateMode", "mergeMode").foreach(k =>
       s.conf.set(s"spark.graft.$k", "copy-on-write"))
     require(intact, "q159: a MoR commit rewrote or dropped a pre-existing file")
-    val resolved = graft.sources.GraftDataSource.resolveDataDir(conf, s"$root/db")
-    val dvs = graft.sources.GraftDataSource.readDvManifest(
-      new org.apache.hadoop.fs.Path(resolved).getFileSystem(conf),
-      new org.apache.hadoop.fs.Path(resolved))
+    val dvs = liveDvEntries(conf, s"$root/db")
     // DVs must have landed on files CREATED BY the fold itself (steps 3/4
     // delete/update rows living in step 1/2's replacement files) — the
     // accreting-generations path, not just first-generation deletes
-    val dvOnNew = dvs.exists { case (_, rel, _, _) =>
-      !before.contains(new org.apache.hadoop.fs.Path(rel).getName)
-    }
+    val dvOnNew = dvs.exists(d =>
+      !before.contains(new org.apache.hadoop.fs.Path(d.file).getName))
     require(dvOnNew, s"q159: expected delete vectors on MoR-created files, got $dvs")
     s.table("graft_cdc9.db.t")
       .agg(count(lit(1)).as("n_rows"),
@@ -3787,7 +3735,7 @@ object FormatOps {
 
   // ---- q136: planning-time file pruning from manifest zone maps -------------
   // A DML-maintained, range-clustered orders table: a selective key
-  // filter must schedule only the files the carry manifest's zone maps
+  // filter must schedule only the files the generation record's zone maps
   // allow — asserted on the physical plan's input-partition count, with
   // the rows oracle-gated. At 10^5 carried files this is the difference
   // between one task and a cluster-wide wave of "nothing here" probes.
@@ -3866,8 +3814,8 @@ object FormatOps {
   // ---- q163: exact counts from footers under live delete vectors ------------
   // The most common sanity query in a DML-heavy pipeline — `SELECT
   // count(*)` between a merge-on-read DELETE and the next compaction —
-  // must NOT scan: per file, live rows = footer numRows − the `.dvs`
-  // manifest's recorded cardinality, both already in planning metadata.
+  // must NOT scan: per file, live rows = footer numRows − the generation
+  // record's DV cardinality, both already in planning metadata.
   // COUNT(col) rides the same walk when the manifest PROVES the column
   // null-free in every DV'd file (live non-null = rows − deleted);
   // MIN/MAX/SUM — and COUNT of any column whose null-freedom is NOT
@@ -4036,10 +3984,7 @@ object FormatOps {
       graft.sources.GraftDataSource.bucketOf(_, 8, tag).isDefined)
     require(tagged, s"q165: untagged replacement files break the layout claim: " +
       s"${freshFiles.filterNot(graft.sources.GraftDataSource.bucketOf(_, 8, tag).isDefined)}")
-    val resolved = graft.sources.GraftDataSource.resolveDataDir(conf, s"$root/o")
-    require(graft.sources.GraftDataSource.readDvManifest(
-        new org.apache.hadoop.fs.Path(resolved).getFileSystem(conf),
-        new org.apache.hadoop.fs.Path(resolved)).nonEmpty,
+    require(liveDvEntries(conf, s"$root/o").nonEmpty,
       "q165: the UPDATE must leave delete vectors")
     // probe join in a child session (AQE off => the plan is final):
     // key-grouped scan on both sides, zero exchanges, DVs + replacement

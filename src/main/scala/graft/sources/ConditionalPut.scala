@@ -135,7 +135,7 @@ object ConditionalPut {
     * pointer from `expectGen` to `newGen` ONLY if nobody moved it in
     * between. False = the precondition failed (pointer changed or the
     * read raced a create) — the caller must re-read the table state and
-    * REBASE its generation (its carry manifest references the old
+    * REBASE its generation (its record references the old
     * files), not just retry the put; that is a planning decision, so no
     * loop lives here. */
   def swapPointer(store: ObjectStore, key: String,

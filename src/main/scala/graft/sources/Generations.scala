@@ -30,7 +30,7 @@ import org.apache.spark.sql.sources._
   * resolves the race OPTIMISTICALLY: the loser re-reads the winner's
   * view, checks file-level conflict (the files it rewrote must be
   * carried untouched by the winner, and nothing the winner added may
-  * admit its key filters), rebases its carry manifest, and re-publishes
+  * admit its key filters), rebases its carried entries, and re-publishes
   * at the next index — two upserts on disjoint keys BOTH commit, equal
   * to a serial order ([[rebaseStaging]]). A true overlap, and the full
   * [[rewrite]] (whose footprint is the whole table), still fail loudly.
@@ -118,8 +118,8 @@ object Generations {
     * surviving generation index (live or published-but-unswapped), which
     * a rewrite must allocate past. Shared by [[rewrite]] (entry sweep)
     * and [[vacuum]] (standalone reclaim). */
-  private def sweepDeadData(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      liveIdx: Option[Int], lastSwapOld: Boolean, grace: Long): Int = {
+  private def sweepDeadData(conf: Configuration, fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, liveIdx: Option[Int], lastSwapOld: Boolean, grace: Long): Int = {
     var maxSurvivingIdx = liveIdx.getOrElse(0)
     val entries = fs.listStatus(root)
     def stale(st: org.apache.hadoop.fs.FileStatus): Boolean =
@@ -142,7 +142,7 @@ object Generations {
         System.currentTimeMillis() - newest >= grace
       }
     // Pass 1 — classify. Reclaimable entries can still hold files a
-    // SURVIVING generation's carry manifest references (file-granular
+    // SURVIVING generation's record references (file-granular
     // DML carries untouched files of older generations by reference),
     // so deletion below is file-selective, never blind.
     val tmpVictims = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
@@ -177,14 +177,14 @@ object Generations {
             tmpVictims += st
       }
     }
-    // files pinned by any survivor's carry manifest (root-relative paths;
-    // fresh stagings pin too — their manifest is about to become live),
-    // plus delete-vector blobs its `.dvs` references: a carried file's
-    // DV lives in the generation that created it, and losing the blob
-    // would silently RESURRECT the deleted rows
+    // files pinned by any survivor's record (root-relative paths; fresh
+    // stagings pin too — their record is about to become live), plus the
+    // delete-vector blobs it references: a carried file's DV lives in the
+    // generation that created it, and losing the blob would silently
+    // RESURRECT the deleted rows
     val referenced: Set[String] = survivors.result().flatMap { d =>
-      GraftDataSource.readCarryManifest(fs, d).map(_._1) ++
-        GraftDataSource.readDvManifest(fs, d).map(_._3)
+      GenerationRecord.read(conf, d).toSeq
+        .flatMap(r => r.files.map(_.rel) ++ r.deleteVectors.map(_.blob))
     }.toSet
     tmpVictims.result().foreach(st => fs.delete(st.getPath, true))
     victims.result().foreach(st => deleteUnreferenced(fs, root, st, referenced))
@@ -192,10 +192,10 @@ object Generations {
   }
 
   /** Reclaim `st` except the files `referenced` pins. A generation dir
-    * that loses SOME files stops being a complete snapshot: its
-    * `.swap-ts` (and tag/manifest) markers are removed so time travel
-    * refuses it loudly instead of serving partial rows; the pinned files
-    * stay until the manifests referencing them are themselves swept. */
+    * that loses SOME files stops being a complete snapshot: its record is
+    * removed so time travel refuses it loudly instead of serving partial
+    * rows; the pinned files stay until the records referencing them are
+    * themselves swept. */
   private def deleteUnreferenced(fs: org.apache.hadoop.fs.FileSystem, root: Path,
       st: org.apache.hadoop.fs.FileStatus, referenced: Set[String]): Unit = {
     if (st.isFile) {
@@ -204,12 +204,13 @@ object Generations {
       return
     }
     // ORDERING INVARIANT the racing-reader guard depends on
-    // (GraftDataSource.listPartitionedSizedAt): the generation's
-    // `.swap-ts` marker is removed BEFORE any data file, so a reader
-    // that still sees the marker after finishing its walk is guaranteed
-    // a complete listing — a walk overlapping this sweep finds the
-    // marker gone and retries instead of silently returning partial rows
-    fs.delete(new Path(st.getPath, GraftDataSource.SwapTsName), false)
+    // (GraftDataSource.listPartitionedSizedAt): the generation's record
+    // is removed BEFORE any data file, so a reader that still sees the
+    // record after finishing its walk is guaranteed a complete listing —
+    // a walk overlapping this sweep finds the record gone and retries
+    // instead of silently returning partial rows
+    val record = GenerationRecord.path(st.getPath)
+    fs.delete(record, false)
     if (referenced.isEmpty) { fs.delete(st.getPath, true); return }
     val files = Seq.newBuilder[Path]
     val it = fs.listFiles(st.getPath, true)
@@ -218,9 +219,9 @@ object Generations {
       .partition(p => referenced.contains(GraftDataSource.relativePath(root, p)))
     if (pinned.isEmpty) { fs.delete(st.getPath, true); return }
     dead.foreach(fs.delete(_, false))
-    fs.delete(new Path(st.getPath, GraftDataSource.RewriteTagName), false)
-    fs.delete(new Path(st.getPath, GraftDataSource.CarryManifestName), false)
-    fs.delete(new Path(st.getPath, GraftDataSource.DvManifestName), false)
+    // a record some writer slipped back in after the first delete is dead
+    // too: a partially-reclaimed dir must never read as complete
+    fs.delete(record, false)
   }
 
   /** Standalone retention reclaim (`VACUUM`): run the dead-data sweep
@@ -236,26 +237,11 @@ object Generations {
     ()
   }
 
-  /** The idempotency key stamped on a generation dir, if any. Tolerates
-    * the dir (or marker) vanishing under a concurrent grace-sweep — the
-    * same contract as [[GraftDataSource.readSwapTs]]. */
-  def rewriteTag(conf: Configuration, genDir: Path): Option[String] =
-    try {
-      val p = new Path(genDir, GraftDataSource.RewriteTagName)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
-    } catch { case _: java.io.IOException => None }
-
   /** One row per generation still on disk: (index, isLive, birth epoch
     * ms, idempotency tag, graft file count, bytes). Metadata-only; a
     * generation reclaimed by a concurrent sweep mid-listing is simply
-    * omitted rather than failing the whole call. */
+    * omitted rather than failing the whole call, and one whose record is
+    * missing or damaged shows no birth or tag (reading it refuses). */
   def historyRows(conf: Configuration, dir: String)
       : Seq[(Int, Boolean, Option[Long], Option[String], Long, Long)] = {
     val root = new Path(dir)
@@ -275,19 +261,20 @@ object Generations {
             val f = it.next()
             if (f.getPath.getName.endsWith(".graft")) { nFiles += 1; bytes += f.getLen }
           }
-          Some((i, liveIdx.contains(i),
-            GraftDataSource.readSwapTs(conf, st.getPath),
-            rewriteTag(conf, st.getPath), nFiles, bytes))
+          val rec = try GenerationRecord.read(conf, st.getPath)
+            catch { case _: graft.format.OliveFormatException => None }
+          Some((i, liveIdx.contains(i), rec.flatMap(_.born), rec.flatMap(_.tag),
+            nFiles, bytes))
         } catch { case _: java.io.IOException => None } // swept mid-listing
       }
     }.sortBy(_._1)
   }
 
   /** The idempotency key stamped on `dir`'s LIVE generation, if any —
-    * the `.rewrite-tag` written by the rewrite that produced it. */
+    * the record's `tag`, exactly as the rewrite that produced it was
+    * keyed. */
   def liveRewriteTag(conf: Configuration, dir: String): Option[String] =
-    GraftDataSource.readGenPointer(conf, dir)
-      .flatMap(gen => rewriteTag(conf, new Path(new Path(dir), gen)))
+    GenerationRecord.live(conf, dir).flatMap(_.tag)
 
   /** A deliberate pointer write outside the publish path (restore's
     * backward swing and its rollback): routed through the CAS seam on
@@ -310,8 +297,7 @@ object Generations {
     val fs = root.getFileSystem(conf)
     val target = f"gen-$generation%05d"
     val prev = GraftDataSource.readGenPointer(conf, dir)
-    require(fs.exists(new Path(root, target)) &&
-      fs.exists(new Path(new Path(root, target), GraftDataSource.SwapTsName)),
+    require(GenerationRecord.read(conf, new Path(root, target)).isDefined,
       s"generation $generation is not present in $dir (never existed, or " +
         "already vacuumed) — nothing to restore to")
     // same atomic publish as a rewrite's swap; readers see old or new,
@@ -324,7 +310,7 @@ object Generations {
     // naming a deleted directory — the accidental-concurrency contract
     // is DETECTED, not wedged. (A sweep landing after THIS check loses
     // the race cleanly: the pointer already protects the target.)
-    if (!fs.exists(new Path(new Path(root, target), GraftDataSource.SwapTsName))) {
+    if (!GenerationRecord.exists(fs, new Path(root, target))) {
       prev.foreach(p => writePointer(conf, dir, root, p))
       throw new graft.format.OliveFormatException(
         s"restore of $dir to generation $generation raced a concurrent " +
@@ -370,7 +356,7 @@ object Generations {
       graceMs: Long = -1L,
       idempotencyKey: Option[String] = None,
       rowChurning: Boolean = true,
-      beforePublish: Option[(Configuration, Path) => Unit] = None): Unit = {
+      cluster: => Option[GenerationRecord.Cluster] = None): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
@@ -427,13 +413,12 @@ object Generations {
       shapedWriter(df0, layout, targetFiles, t, writeOptions, partCols)
         .save(staging.toString)
     } }
-    // metadata a caller wants published ATOMICALLY with the generation
-    // (e.g. the clustering record) is written into the staging dir here,
-    // so it rides the publish rename — it can never land in a
-    // generation some concurrent rewrite published in between
-    beforePublish.foreach(_(conf, staging))
+    // a clustering claim (evaluated now, after the writes) rides the
+    // generation's record, so it publishes atomically with the data it
+    // describes
     Prof.time("rw.publish") {
       publishStaging(fs, conf, root, staging, nextGen, idempotencyKey, dir,
+        cluster = cluster,
         sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet))) }
     // stats lifecycle: a full rewrite either churned every row (DML —
     // the whole listing counts against each table's ANALYZE snapshot)
@@ -473,7 +458,7 @@ object Generations {
       age >= grace
     }
     val maxSurvivingIdx = Prof.time("prep.sweep") {
-      sweepDeadData(fs, root, liveIdx, lastSwapOld, grace) }
+      sweepDeadData(conf, fs, root, liveIdx, lastSwapOld, grace) }
     // A fresh PUBLISHED generation above the pointer is a concurrent
     // rewrite in its rename→swap window. Allocating past it while
     // reading the pointer view would derive gen N+1 from gen N−k and
@@ -487,7 +472,7 @@ object Generations {
     // the sweep reclaims it and rewrites proceed normally).
     val topGen = new Path(root, f"gen-$maxSurvivingIdx%05d")
     if (liveIdx.getOrElse(0) < maxSurvivingIdx &&
-        fs.exists(new Path(topGen, GraftDataSource.SwapTsName)) &&
+        GenerationRecord.exists(fs, topGen) &&
         !fs.exists(new Path(topGen, AbandonMarkerName))) {
       val deadline = System.currentTimeMillis() + 2000L
       var caughtUp = false
@@ -546,13 +531,13 @@ object Generations {
     // dance; the identity transform IS the materialization — the
     // candidate read subtracts the targets' DVs, so the replacement
     // files hold live rows only. requireTargets guards the gap between
-    // the DV-manifest read above and the rewrite's own listing (a
+    // the DV read above and the rewrite's own listing (a
     // concurrent rewrite replacing a target file must refuse, not skip).
     val targetUris = targets.map(_._1).toSet
     val rewritten = rewriteFiles(s, dir, table,
       p => targetUris.contains(p.toUri.getPath),
       (df, _) => df,
-      beforePublish = (_, _, _) => (),
+      cluster = _ => None,
       requireTargets = targetUris)
     val relByUri = rewritten.map(_.swap).toMap
     targets.map { case (uri, card, rows) => (relByUri(uri), card, rows) }
@@ -566,10 +551,9 @@ object Generations {
     * vectors — by reference. The generalized form of the
     * [[materializeDvs]] flow, built for maintenance operations whose
     * footprint is a known file set (incremental reclustering: cost ∝
-    * drift, never the table). `beforePublish` runs inside the staging
-    * before the atomic publish with the carried files' NAMES, so a
-    * caller's metadata record (e.g. the cluster spec) publishes
-    * atomically with the generation it describes. `requireTargets`
+    * drift, never the table). `cluster` gets the carried files' NAMES; a
+    * claim it returns rides the generation's record (see
+    * [[publishStaging]]), None carries the live claim. `requireTargets`
     * (URI paths) must ALL resolve to live targets or the call refuses —
     * the guard for callers that selected their set from metadata read
     * BEFORE the listing (a concurrent rewrite may have replaced a
@@ -578,7 +562,7 @@ object Generations {
   def rewriteFiles(s: SparkSession, dir: String, table: String,
       isTarget: Path => Boolean,
       transform: (DataFrame, Int) => DataFrame,
-      beforePublish: (Configuration, Path, Seq[String]) => Unit,
+      cluster: Seq[String] => Option[GenerationRecord.Cluster],
       requireTargets: Set[String] = Set.empty): Seq[(String, String)] = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(dir)
@@ -621,6 +605,14 @@ object Generations {
     val targetRels = targets.map(GraftDataSource.relativePath(root, _)).toSet
     val statsByRel = files.map(f =>
       GraftDataSource.relativePath(root, f.path) -> f.statsJson).toMap
+    val carried = listed.collect { case (p, size, _)
+        if !targetRels.contains(GraftDataSource.relativePath(root, p)) =>
+      val rel = GraftDataSource.relativePath(root, p)
+      GenerationRecord.FileEntry(rel, size, statsByRel.get(rel))
+    }
+    // rewritten files shed their DVs (the candidate read applied them);
+    // carried files' and sibling tables' entries ride by reference
+    val dvs = GraftDataSource.carryDvEntries(conf, dir, targetRels)
     val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
     claimStaging(conf, staging)
     try {
@@ -631,19 +623,9 @@ object Generations {
         targets.size)
       shapedWriter(df, layout, None, table, Map.empty, partCols).save(staging.toString)
       GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
-      val carried = listed.collect { case (p, size, _)
-          if !targetRels.contains(GraftDataSource.relativePath(root, p)) =>
-        val rel = GraftDataSource.relativePath(root, p)
-        (rel, size, statsByRel.get(rel))
-      }
-      GraftDataSource.writeCarryManifest(fs, staging, carried)
-      // rewritten files shed their DVs (the candidate read applied them);
-      // carried files' and sibling tables' entries ride by reference
-      GraftDataSource.writeDvManifest(fs, staging,
-        GraftDataSource.carryDvEntries(fs, conf, dir, targetRels))
-      beforePublish(conf, staging,
-        carried.map { case (rel, _, _) => new Path(rel).getName })
-      publishStaging(fs, conf, root, staging, nextGen, None, dir,
+      GenerationRecord.stage(conf, staging, carried, dvs)
+      publishStaging(fs, conf, root, staging, nextGen, None, dir, carried, dvs,
+        cluster(carried.map(e => new Path(e.rel).getName)),
         sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet)))
       GraftDataSource.recordChurn(s, dir, table,
         listed.collect { case (p, size, _)
@@ -691,34 +673,33 @@ object Generations {
   }
 
   /** Publish a complete staging dir as generation `nextGen` and swing the
-    * pointer — the atomic tail shared by the full [[rewrite]], the
-    * file-granular [[rewriteTable]], and the SQL row-level COW write. */
+    * pointer — the atomic tail shared by every generation publisher (the
+    * full [[rewrite]], [[rewriteFiles]], the file-granular
+    * [[rewriteTable]], the SQL row-level COW and merge-on-read commits,
+    * and the catalog's staged CTAS and DROP). The caller hands over what
+    * the generation carries by reference (`carried` files, `dvs`) and an
+    * optional clustering claim whose members the publish extends with
+    * the staging's own files; the publish adds the staging's own output
+    * and writes the generation's record ONCE, just before the rename. */
   private[sources] def publishStaging(fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
       root: Path, staging: Path, nextGen: String,
       idempotencyKey: Option[String], dir: String,
+      carried: Seq[GenerationRecord.FileEntry] = Seq.empty,
+      dvs: Seq[GenerationRecord.DvEntry] = Seq.empty,
+      cluster: Option[GenerationRecord.Cluster] = None,
       keepStagingOnConflict: Boolean = false,
       sourceView: Option[(String, Set[String])] = None): Unit = {
-    // Self-covering stats manifest, for EVERY generation publisher (full
-    // rewrite, file-granular DML, SQL COW write, MoR delta, staged
-    // CTAS): the publisher's own fresh output gets the same
+    // Self entries: the publisher's own fresh output gets the same
     // planning-time zone maps carried files enjoy, so planning drops
     // non-matching files before any task exists, estimateStatistics
     // reports exact rows, and the next DML classifies candidates with
-    // zero footer I/O. One parallel footer sweep over files this
-    // publish just staged; entries use the rel paths the files will
-    // have AFTER the rename below, and the listing's name-dedup keeps
-    // self-references from double-counting. Carried entries already in
-    // the staging's manifest (a DML's rebase output) are preserved;
-    // entries whose file NAME matches a staged file are stale
-    // self-references from a previous conflicted attempt at a different
-    // generation index and are replaced. A retried publish recomputes
-    // with the CURRENT nextGen, so the prefix can never go stale.
-    // kill-switch parse is fail-safe: any unparseable value means ON
-    // (a typo'd conf must not fail every publish mid-write)
-    if (org.apache.spark.sql.SparkSession.getActiveSession.forall { ss =>
-      try ss.conf.get("spark.graft.rewrite.statsManifest", "true").toBoolean
-      catch { case _: IllegalArgumentException => true }
-    }) Prof.time("pub.statsManifest") {
+    // zero footer I/O. Stats the write tasks already handed over through
+    // the batch commit (the staging record's entries) serve directly;
+    // only files some other write path staged pay a footer open. Entries
+    // use the rel paths the files will have AFTER the rename below (a
+    // rebased retry recomputes them with its CURRENT nextGen), and the
+    // listing's name-dedup keeps them from double-counting.
+    val self = Prof.time("pub.selfEntries") {
       def walkOut(p: Path): Seq[(Path, Long)] =
         fs.listStatus(p).toSeq.flatMap { st =>
           if (st.isFile && st.getPath.getName.endsWith(".graft"))
@@ -726,95 +707,45 @@ object Generations {
           else if (st.isDirectory) walkOut(st.getPath)
           else Seq.empty
         }
-      val fresh = walkOut(staging)
-      if (fresh.nonEmpty) {
-        val freshNames = fresh.map(_._1.getName).toSet
-        val existing = GraftDataSource.readCarryManifestFull(fs, staging)
-          .filterNot(e => freshNames.contains(new Path(e._1).getName))
-        // stats the write tasks already handed over through their commit
-        // messages (the .staged-stats sidecar, staging-relative rels)
-        // serve directly; only files some other write path staged — or a
-        // torn sidecar line dropped — pay a footer open
-        val staged = GraftDataSource.readStagedStats(fs, staging)
-          .map { case (rel, _, js) => rel -> js }.toMap
-        val entries = GraftDataSource.inParallel(fresh) { case (p, size) =>
-          val rel = GraftDataSource.relativePath(staging, p)
-          val js = staged.getOrElse(rel, {
-            val r = graft.format.GraftFileReader.open(p.getFileSystem(conf), p)
-            val metas = try r.footer.chunks.flatMap(_.tables).toSeq finally r.close()
-            graft.format.Stats.statsToJson(metas)
-          })
-          (s"$nextGen/$rel", size, Some(js): Option[String])
-        }
-        GraftDataSource.writeCarryManifest(fs, staging, existing ++ entries)
+      val prefix = staging.getName + "/"
+      val staged = GenerationRecord.read(conf, staging).toSeq.flatMap(_.files)
+        .collect { case GenerationRecord.FileEntry(rel, _, Some(js)) if rel.startsWith(prefix) =>
+          rel.stripPrefix(prefix) -> js }.toMap
+      GraftDataSource.inParallel(walkOut(staging)) { case (p, size) =>
+        val rel = GraftDataSource.relativePath(staging, p)
+        val js = staged.getOrElse(rel, {
+          val r = graft.format.GraftFileReader.open(p.getFileSystem(conf), p)
+          val metas = try r.footer.chunks.flatMap(_.tables).toSeq finally r.close()
+          graft.format.Stats.statsToJson(metas)
+        })
+        GenerationRecord.FileEntry(s"$nextGen/$rel", size, Some(js))
       }
-      // the sidecar never publishes
-      try fs.delete(new Path(staging, GraftDataSource.StagedStatsName), false)
-      catch { case _: java.io.IOException => }
     }
-    // the clustering record survives every publish: a DML that replaces
-    // one candidate file must not erase the CLAIM for the thousands of
-    // carried files that are still perfectly tiled (a vanished record
-    // reads as never-clustered and triggers a pointless full
-    // re-cluster). Copied byte-for-byte from the superseded live
-    // generation unless this staging wrote its own (cluster /
-    // incremental recluster); honesty is downstream's job — DESCRIBE
-    // diffs the record's member NAMES against the live listing, so a
-    // carried record over drifted files reports 'partial' with the
-    // exact drift, never a false 'clustered'.
-    locally {
-      val specDst = new Path(staging, GraftDataSource.ClusterSpecName)
-      // NonFatal, not just IOException: a store client's RuntimeException
-      // from the OPTIONAL record copy must not fail a DML whose data is
-      // already staged — the carry is best-effort by design (a dropped
-      // claim is a conservative DESCRIBE, never wrong rows)
-      try {
-        if (!fs.exists(specDst)) {
-          val src = GraftDataSource.resolveDataDir(conf, dir)
-          if (src != dir) {
-            val specSrc = new Path(src, GraftDataSource.ClusterSpecName)
-            if (fs.exists(specSrc)) {
-              val in = fs.open(specSrc)
-              val bytes = try in.readAllBytes() finally in.close()
-              // carry ONLY name-tracking records (5+ lines): DESCRIBE
-              // checks those name-exactly, so a carried record over a
-              // file-replacing DML reads 'partial', never 'clustered'.
-              // A vintage 4-line record has only the count check, which
-              // a count-preserving replacement would fool — for those
-              // the old vanish-on-publish behavior IS the honest claim.
-              if (new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-                  .split("\n").length > 4) {
-                val out = AtomicPublish.createStream(conf, specDst, overwrite = false)
-                try out.write(bytes) finally out.close()
-              }
-            }
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => }
-    }
-    // birth-time marker INSIDE the gen dir, before the swap: appends keep
-    // bumping the live dir's mtime, so TIMESTAMP AS OF anchors on this
-    // instead (GraftCatalog.loadTable(ident, timestamp))
-    locally {
-      val ts = new Path(staging, GraftDataSource.SwapTsName)
-      val out = AtomicPublish.createStream(conf, ts, overwrite = true)
-      try out.write(String.valueOf(System.currentTimeMillis())
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    // idempotency key rides the same atomic publish: crash BEFORE the
-    // swap → no tag visible, a retry re-applies (correct: nothing
-    // landed); crash AFTER → the live tag marks the batch applied and
-    // the retry no-ops at entry
-    idempotencyKey.foreach { k =>
-      val tp = new Path(staging, GraftDataSource.RewriteTagName)
-      val out = AtomicPublish.createStream(conf, tp, overwrite = true)
-      try out.write(k.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    // the clustering claim survives every publish that doesn't make its
+    // own: a DML that replaces one candidate file must not erase the
+    // CLAIM for the thousands of carried files that are still perfectly
+    // tiled (a vanished claim reads as never-clustered and triggers a
+    // pointless full re-cluster). Honesty is downstream's job — DESCRIBE
+    // diffs the member NAMES against the live listing, so a carried claim
+    // over drifted files reports 'partial' with the exact drift, never a
+    // false 'clustered'. NonFatal: the carry is best-effort (a dropped
+    // claim is a conservative DESCRIBE, never wrong rows), and must not
+    // fail a publish whose data is already staged.
+    val clusterClaim = cluster.map(c =>
+      c.copy(members = c.members ++ self.map(e => new Path(e.rel).getName)))
+      .orElse(try GenerationRecord.live(conf, dir).flatMap(_.cluster)
+      catch { case scala.util.control.NonFatal(_) => None })
+    // the record, written once: `born` anchors TIMESTAMP AS OF (appends
+    // keep bumping the live dir's mtime), and the idempotency key rides
+    // the same atomic publish — crash BEFORE the swap → no tag visible, a
+    // retry re-applies (correct: nothing landed); crash AFTER → the live
+    // tag marks the batch applied and the retry no-ops at entry
+    GenerationRecord.write(conf, staging, GenerationRecord.Record(
+      born = Some(System.currentTimeMillis()), tag = idempotencyKey,
+      files = carried ++ self, deleteVectors = dvs, cluster = clusterClaim))
     // the staging-claim gate: claimStaging wrote this marker when the
     // staging was created; a grace sweep that reclaimed the dir took the
-    // claim with it, and the marker writes just above would then have
+    // claim with it, and the record write just above would then have
     // RESURRECTED an empty shell via implicit mkdirs. Publishing that
     // shell would swing the pointer to a generation missing every
     // rewritten row — silent data loss; refuse loudly instead. (The
@@ -850,7 +781,7 @@ object Generations {
     // the swap: one atomic pointer replacement, then FORWARD-ONLY
     // convergence. With optimistic rebase two racing DMLs both commit:
     // the loser's gen N+1 carries the winner's gen N (its whole view
-    // rides the rebased manifest), so the pointer must settle on the
+    // rides the rebased record), so the pointer must settle on the
     // HIGHEST published index. A blind overwrite alone can finish-order
     // invert that (winner's swap lands after the rebased loser's and the
     // loser's superset generation goes silently unreferenced), so each
@@ -894,21 +825,21 @@ object Generations {
     // the rewrite's own listing would fall invisible the moment the
     // pointer moved — silent row loss for a writer that did everything
     // right. Post-swap, re-list the superseded source (PINNED, not via
-    // the pointer) and fold unknown files into the published manifest by
+    // the pointer) and fold unknown files into the published record by
     // reference, which linearizes the append AFTER this rewrite. The
     // complementary half lives in GraftBatchWrite.commit: an appender
     // that observes the moved pointer re-homes its own files. The two
     // halves meet at the swap — a file visible before it is seen by this
-    // re-list; one visible after it sees the new pointer. Manifest-add
-    // is monotone (only ever adds visibility), so the overwrite is safe
+    // re-list; one visible after it sees the new pointer. Adding entries
+    // is monotone (only ever adds visibility), so the rewrite is safe
     // under concurrent readers.
     sourceView.foreach { case (srcDir, known) => Prof.time("pub.lateAppendFold") {
       try {
         // RAW physical walk, not the guarded listing: the pointer-
-        // appeared / marker guards exist to protect READERS from
-        // partial views, but here the pointer moving is exactly what we
-        // just did, and manifest refs of the source gen are immutable
-        // (they were in `known`). Only physical newcomers matter.
+        // appeared / record guards exist to protect READERS from partial
+        // views, but here the pointer moving is exactly what we just did,
+        // and record refs of the source gen are immutable (they were in
+        // `known`). Only physical newcomers matter.
         val srcRoot = new Path(srcDir)
         def walkSrc(p: Path): Seq[(Path, Long)] =
           fs.listStatus(p).toSeq.flatMap { st =>
@@ -921,20 +852,10 @@ object Generations {
           .filter { case (p, _) =>
             !known.contains(p.toUri.getPath) &&
               // an appender's own re-home (the other half) may have moved
-              // the file already — a manifest entry must never dangle
+              // the file already — an entry must never dangle
               fs.exists(p)
           }
-        if (late.nonEmpty) {
-          val genPath2 = new Path(root, nextGen)
-          val existing = GraftDataSource.readCarryManifestFull(fs, genPath2)
-          val have = existing.map(_._1).toSet
-          val add = late
-            .map { case (p, sz) =>
-              (GraftDataSource.relativePath(root, p), sz, None: Option[String]) }
-            .filterNot(e => have.contains(e._1))
-          if (add.nonEmpty)
-            GraftDataSource.writeCarryManifest(fs, genPath2, existing ++ add)
-        }
+        if (late.nonEmpty) foldLateAppends(conf, fs, root, dir, nextGen, late)
       } catch { case _: java.io.IOException => } // best-effort: the appender's guard closes the gap
     } }
     // deliberately NO deletion here: the superseded data (legacy loose
@@ -943,10 +864,35 @@ object Generations {
     // rewrite's entry sweep reclaims it after `graceMs`
   }
 
+  /** Add `late` files to the just-published generation's record by
+    * reference. A writer must never recreate a record a sweep deleted (a
+    * partially-reclaimed dir would read as complete), so the fold runs
+    * only while the pointer names `nextGen`: a sweep reclaims generations
+    * BELOW the pointer only, and publishes move it forward only. A
+    * pointer that moved during the write leaves that unproven, so the
+    * write is retracted — a superseded generation's late entries can't
+    * reach the live view anyway. */
+  private def foldLateAppends(conf: Configuration, fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, dir: String, nextGen: String, late: Seq[(Path, Long)]): Unit = {
+    def live: Boolean = GraftDataSource.readGenPointer(conf, dir).contains(nextGen)
+    val genPath = new Path(root, nextGen)
+    if (!live) return
+    GenerationRecord.read(conf, genPath).foreach { rec =>
+      val have = rec.files.map(_.rel).toSet
+      val add = late.map { case (p, sz) =>
+        GenerationRecord.FileEntry(GraftDataSource.relativePath(root, p), sz, None)
+      }.filterNot(e => have.contains(e.rel))
+      if (add.nonEmpty) {
+        GenerationRecord.write(conf, genPath, rec.copy(files = rec.files ++ add))
+        if (!live) fs.delete(GenerationRecord.path(genPath), false)
+      }
+    }
+  }
+
   /** File-granular copy-on-write DML for ONE table: rewrite only the
     * files that can hold rows the operation touches, carry every other
-    * file of the live view BY REFERENCE in the new generation's
-    * `.carry` manifest ([[GraftDataSource.CarryManifestName]]).
+    * file of the live view BY REFERENCE in the new generation's record
+    * ([[GenerationRecord]]).
     *
     * Candidate selection is the scan's own skip arsenal turned around:
     * a file whose every chunk PROVES (zone maps + blooms,
@@ -1021,8 +967,19 @@ object Generations {
         None, writeOptions, graceMs, idempotencyKey)
       return true
     }
-    val (candidates, carried) = files.partition(_.candidate)
+    val (candidates, kept) = files.partition(_.candidate)
     if (candidates.isEmpty && !alwaysWrite && idempotencyKey.isEmpty) return true
+    val myCands = candidates.map(f =>
+      GraftDataSource.relativePath(root, f.path)).toSet
+    // everything untouched is carried by root-relative reference;
+    // re-carried files keep their ORIGINAL location (flattened chains)
+    // and their zone-map stats ride along, so the NEXT DML prunes them
+    // with zero per-file I/O. Carried files keep their delete vectors
+    // (the candidate read below applies DVs, so REWRITTEN files shed
+    // theirs — the replacement holds live rows only); sibling tables'
+    // entries carry.
+    var carried = kept.map(carriedEntry(root, _))
+    var dvs = GraftDataSource.carryDvEntries(conf, dir, myCands)
     val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
     claimStaging(conf, staging)
     // candidate rows flow through the normal scan (partition values and
@@ -1047,23 +1004,10 @@ object Generations {
     // (the write above re-created at most this table's own)
     Prof.time("dml.carryBucketMarkers") {
       GraftDataSource.carryBucketMarkers(fs, conf, dir, staging) }
-    // everything untouched is carried by root-relative reference;
-    // re-carried files keep their ORIGINAL location (flattened chains)
-    // and their zone-map stats ride along, so the NEXT DML prunes them
-    // with zero per-file I/O
+    // staged into the staging's record before the publish, so a
+    // concurrent sweep pins them for as long as this staging lives
     Prof.time("dml.writeCarryManifest") {
-      GraftDataSource.writeCarryManifest(fs, staging,
-        carried.map(f =>
-          (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-    }
-    // carried files keep their delete vectors (the candidate read above
-    // already applied DVs, so REWRITTEN files shed theirs — the
-    // replacement holds live rows only); sibling tables' entries carry
-    Prof.time("dml.writeDvManifest") {
-      GraftDataSource.writeDvManifest(fs, staging,
-        GraftDataSource.carryDvEntries(fs, conf, dir,
-          candidates.map(f => GraftDataSource.relativePath(root, f.path)).toSet))
-    }
+      GenerationRecord.stage(conf, staging, carried, dvs) }
     // Optimistic-concurrency publish: losing the `gen-NNNNN` rename to a
     // concurrent rewrite is NOT fatal for a file-granular DML — the
     // staged output only depends on the candidate files' rows, so if the
@@ -1073,15 +1017,13 @@ object Generations {
     // keys both commit, final state equal to either serial order; a true
     // overlap still fails loudly (re-running the DML against the new
     // state is the only sound answer, and only the caller can decide).
-    val myCands = candidates.map(f =>
-      GraftDataSource.relativePath(root, f.path)).toSet
     var gen = nextGen
     var attempts = 0
     while (true) {
       try {
         Prof.time("dml.publish") {
           publishStaging(fs, conf, root, staging, gen, idempotencyKey, dir,
-            keepStagingOnConflict = true,
+            carried, dvs, keepStagingOnConflict = true,
             sourceView = Some((srcDir, srcKnown)))
         }
         // stats lifecycle: the candidate files' rows were rewritten —
@@ -1095,12 +1037,14 @@ object Generations {
           if (attempts > 5) { fs.delete(staging, true); throw e }
           rebaseStaging(conf, fs, root, dir, table, staging, gen,
             myCands, pruneFilters) match {
-            case Some((next, winSrc, winKnown)) =>
-              gen = next
+            case Some(r) =>
+              gen = r.gen
+              carried = r.carried
+              dvs = r.deleteVectors
               // the fold must now compare against the WINNER's view —
               // late appends land in ITS gen dir, the new live target
-              srcDir = winSrc
-              srcKnown = winKnown
+              srcDir = r.srcDir
+              srcKnown = r.srcKnown
             case None =>
               fs.delete(staging, true)
               throw new GenerationConflictException(
@@ -1119,30 +1063,30 @@ object Generations {
     * winner's view under OUR key filters, and iff the set of files this
     * DML must rewrite is UNCHANGED — the winner carried every one of our
     * candidate files untouched, and none of its new/rewritten files can
-    * hold a row our filters admit — swap the staging's carry manifest
-    * for (winner's view − our candidates) and return the next free
-    * generation index to publish at. None = true conflict (including
+    * hold a row our filters admit — restage the carried entries as
+    * (winner's view − our candidates) with the winner's delete vectors
+    * and return them with the next free generation index to publish
+    * at. None = true conflict (including
     * un-pruned DMLs, whose footprint is the whole table by definition).
     *
     * Soundness: candidate files are immutable, so our staged transform
     * output is byte-identical to what a serial re-run after the winner
     * would produce for those files; everything else of the winner's view
-    * rides the manifest by reference. The published generation therefore
+    * rides the record by reference. The published generation therefore
     * equals the winner-then-us serial order. The winner's view is listed
     * from its GEN DIR, not the pointer (its swap may not have landed
     * yet — the pointer view could still be the pre-race world). */
   private def rebaseStaging(conf: Configuration, fs: org.apache.hadoop.fs.FileSystem,
       root: Path, dir: String, table: String, staging: Path, lostGen: String,
       myCands: Set[String],
-      pruneFilters: Option[Seq[graft.format.Stats.Prune]])
-      : Option[(String, String, Set[String])] = {
+      pruneFilters: Option[Seq[graft.format.Stats.Prune]]): Option[Rebased] = {
     if (pruneFilters.forall(_.isEmpty)) return None // whole-table footprint
     val winnerView =
       try GraftDataSource.listGenerationSized(conf, dir, lostGen)
       catch { case _: java.io.IOException => return None } // winner swept?
-    val winnerStats = GraftDataSource.genCarryStats(conf, dir, lostGen)
+    val winner = GenerationRecord.read(conf, new Path(root, lostGen)).getOrElse(return None)
     val files = classifyForDml(conf, root, winnerView, table, pruneFilters,
-      dir, manifestStatsOverride = Some(winnerStats))
+      dir, recordOverride = Some(winner))
     val newCands = files.filter(_.candidate)
       .map(f => GraftDataSource.relativePath(root, f.path)).toSet
     if (newCands != myCands) return None // winner moved our footprint
@@ -1151,21 +1095,16 @@ object Generations {
     // WITHOUT the winner's deletes and would silently resurrect them —
     // refuse the rebase, the caller re-runs against the new state.
     // DVs on carried files rebase by reference like the files themselves.
-    val winnerDvs = GraftDataSource.readDvManifest(fs, new Path(root, lostGen))
-    if (winnerDvs.exists { case (_, rel, _, _) => myCands.contains(rel) })
-      return None
-    val carried2 = files.filterNot(_.candidate)
+    val winnerDvs = winner.deleteVectors
+    if (winnerDvs.exists(d => myCands.contains(d.file))) return None
+    val carried = files.filterNot(_.candidate).map(carriedEntry(root, _))
     // the failed publish consumed the staging's liveness claim just
     // before its rename; the staging is demonstrably fresh (we wrote it
     // this call), so re-claim for the re-publish
     claimStaging(conf, staging)
-    GraftDataSource.writeCarryManifest(fs, staging,
-      carried2.map(f =>
-        (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-    // replace (never merge) the staging's pre-race `.dvs`: the winner's
-    // entries ARE the rebased view's delete state
-    fs.delete(new Path(staging, GraftDataSource.DvManifestName), false)
-    GraftDataSource.writeDvManifest(fs, staging, winnerDvs)
+    // replace (never merge) the staged set: the winner's view minus our
+    // candidates, and the winner's delete vectors, ARE the rebased state
+    GenerationRecord.stage(conf, staging, carried, winnerDvs)
     // allocate past every generation now on disk (the winner, plus any
     // racer that landed while we rebased — a further collision just
     // loops back here)
@@ -1174,9 +1113,17 @@ object Generations {
         GraftDataSource.genIndex(st.getPath.getName).fold(m)(math.max(m, _))
       else m
     }
-    Some((f"gen-${maxIdx + 1}%05d", new Path(root, lostGen).toString,
-      winnerView.map(_._1.toUri.getPath).toSet))
+    Some(Rebased(f"gen-${maxIdx + 1}%05d", carried, winnerDvs,
+      new Path(root, lostGen).toString, winnerView.map(_._1.toUri.getPath).toSet))
   }
+
+  /** A rebased staging's publish inputs (see [[rebaseStaging]]). */
+  private case class Rebased(gen: String, carried: Seq[GenerationRecord.FileEntry],
+      deleteVectors: Seq[GenerationRecord.DvEntry], srcDir: String, srcKnown: Set[String])
+
+  private[sources] def carriedEntry(root: Path, f: DmlFile): GenerationRecord.FileEntry =
+    GenerationRecord.FileEntry(GraftDataSource.relativePath(root, f.path), f.size,
+      Some(f.statsJson))
 
   /** One live file's classification for a file-granular DML. */
   private[sources] case class DmlFile(path: Path, size: Long,
@@ -1185,14 +1132,14 @@ object Generations {
 
   /** Classify every listed file for a file-granular DML on `table`:
     * candidate (can hold touched rows → rewrite) vs carried. Zone-map
-    * stats come from the live generation's carry manifest where present,
+    * stats come from the live generation's record where present,
     * so the overwhelming majority of a large table's files — everything
     * the previous rewrite carried — is classified with ZERO per-file
-    * I/O; footers are opened only for files the manifest doesn't cover
-    * (the previous rewrite's own output) and for manifest-kept
+    * I/O; footers are opened only for files the record doesn't cover
+    * (the previous rewrite's own output) and for record-kept
     * candidates, where the footer's blooms get a second chance to
     * prune. Each record carries a fresh-or-reused statsJson so the next
-    * manifest keeps the zero-I/O property (files are immutable, stats
+    * record keeps the zero-I/O property (files are immutable, stats
     * never go stale). A corrupt/legacy stats field falls back to the
     * footer probe — never a wrong skip.
     *
@@ -1210,7 +1157,7 @@ object Generations {
   private[sources] def classifyForDml(conf: Configuration, root: Path,
       listed: Seq[(Path, Long, Map[String, String])], table: String,
       pruneFilters: Option[Seq[graft.format.Stats.Prune]], dir: String,
-      manifestStatsOverride: Option[Map[String, String]] = None): Seq[DmlFile] = {
+      recordOverride: Option[GenerationRecord.Record] = None): Seq[DmlFile] = {
     import graft.format.{Evolution, Stats}
     val declared: Option[org.apache.spark.sql.types.StructType] =
       if (pruneFilters.forall(_.isEmpty)) None // nothing to translate
@@ -1248,8 +1195,10 @@ object Generations {
           !fls.exists(f => metas.forall(t => skipProven(f, t, partCols)))
         case _ => true
       }
-    val manifestStats = manifestStatsOverride
-      .getOrElse(GraftDataSource.liveCarryStats(conf, dir))
+    // the stats parse is shared with planning through the record cache
+    val record = recordOverride.orElse(GenerationRecord.live(conf, dir))
+    val statsJson = record.toSeq.flatMap(_.files).flatMap(e => e.stats.map(e.rel -> _)).toMap
+    val parsed = record.map(_.parsedStats).getOrElse(Map.empty)
     GraftDataSource.inParallel(listed) { case (p, size, parts) =>
       val partCols = parts.keySet
       def footer(): Seq[graft.format.Meta.TableMeta] = {
@@ -1264,12 +1213,12 @@ object Generations {
           mine.nonEmpty && mustRewrite(mine, partCols))
       }
       val rel = GraftDataSource.relativePath(root, p)
-      manifestStats.get(rel).flatMap(graft.format.Stats.statsFromJson) match {
+      parsed.get(rel) match {
         case Some(all) =>
           val mine = all.filter(_.name == table)
           if (mine.nonEmpty && mustRewrite(mine, partCols)) fromFooter() // bloom pass
           else DmlFile(p, size, all.map(_.name).distinct, mine,
-            manifestStats(rel), candidate = false)
+            statsJson(rel), candidate = false)
         case None => fromFooter()
       }
     }

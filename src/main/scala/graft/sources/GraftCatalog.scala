@@ -198,11 +198,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   }
 
   /** SQL `TIMESTAMP AS OF t` (micros per the DSv2 contract): the newest
-    * generation whose BIRTH — the `.swap-ts` marker compaction writes
-    * just before the pointer swap — is <= t. Dir mtimes cannot serve as
-    * birth times (appends keep bumping the live dir's mtime, which would
-    * time-travel appended rows out of existence); markerless generations
-    * (pre-marker files) fall back to mtime. Only generations at or below
+    * generation whose BIRTH — the `born` of its record, stamped just
+    * before the pointer swap — is <= t. Dir mtimes cannot serve as birth
+    * times (appends keep bumping the live dir's mtime, which would
+    * time-travel appended rows out of existence); a generation without a
+    * record (partially reclaimed) is placed by its mtime, and addressing
+    * it then refuses loudly. Only generations at or below
     * the live pointer are candidates — a higher-indexed dir is a crashed
     * compaction's half-written output. Pre-compaction history is not
     * addressable; a time before the first generation is a loud error. */
@@ -220,9 +221,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           GraftDataSource.genIndex(s.getPath.getName).exists(_ <= liveIdx.get))
         .sortBy(s => GraftDataSource.genIndex(s.getPath.getName).get)
     def birth(st: org.apache.hadoop.fs.FileStatus): Long =
-      GraftDataSource.readSwapTs(conf, st.getPath).getOrElse(st.getModificationTime)
+      GenerationRecord.read(conf, st.getPath).flatMap(_.born)
+        .getOrElse(st.getModificationTime)
     // newest-first, stop at the first born <= t: the common recent-
-    // timestamp query reads ONE marker, not one per generation
+    // timestamp query reads ONE record, not one per generation
     val pick = gens.reverseIterator.find(birth(_) <= ms).getOrElse(
       throw new graft.format.OliveFormatException(
         s"no generation of $dir existed at timestamp $ms ms " +
@@ -341,8 +343,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       val root = new Path(dir)
       val listed = GraftDataSource.listPartitionedSized(conf, dir)
       // no live file can hold the NEW table ⇒ candidates empty, every
-      // live file carries with its stats riding the manifest
+      // live file carries with its stats (and delete vectors) riding the
+      // record
       val files = Generations.classifyForDml(conf, root, listed, ident.name(), None, dir)
+      val carried = files.map(Generations.carriedEntry(root, _))
+      val dvs = GraftDataSource.carryDvEntries(conf, dir, Set.empty)
       val nextGen = Generations.prepareRewrite(s, dir)
       val staging = new Path(root, s"$nextGen.tmp-${java.util.UUID.randomUUID()}")
       Generations.claimStaging(conf, staging)
@@ -351,10 +356,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       if (fs.exists(stageMarker))
         AtomicPublish.renameNoClobber(conf, stageMarker,
           new Path(staging, stageMarker.getName))
-      GraftDataSource.writeCarryManifest(fs, staging,
-        files.map(f =>
-          (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-      Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir)
+      GenerationRecord.stage(conf, staging, carried, dvs)
+      Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir,
+        carried, dvs)
       writeMarker(dir, ident.name(), schema)
     } else {
       // loose layout: data files land first (names are uuid-unique; the
@@ -572,15 +576,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * refuses the drop.
     *
     * GENERATION-POINTERED namespaces never delete bytes here: the drop
-    * publishes a NEW generation whose carry manifest simply omits the
-    * table's files. Physically deleting them would leave the live
-    * manifest's entries dangling — every sibling table's next scan would
+    * publishes a NEW generation whose record simply omits the table's
+    * files. Physically deleting them would leave the live record's
+    * entries dangling — every sibling table's next scan would
     * list a carried path and crash on its missing footer — and would
     * gut the frozen older generations whose time-travel readability
     * (`loadTable(ident, version)`: "a since-dropped table included") is
     * part of the contract. The dropped files stop being referenced and
     * the normal grace sweep reclaims them later. Pointerless (loose-
-    * file) namespaces have no manifests and no generations to protect,
+    * file) namespaces have no records and no generations to protect,
     * so they keep the direct physical delete. */
   override def dropTable(ident: Identifier): Boolean = {
     val dir = nsDir(ident.namespace())
@@ -590,7 +594,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val resolved = GraftDataSource.resolveDataDir(conf, dir)
     var hadFiles = false
     if (resolved != dir) {
-      // pointered: classify the live view (manifest stats, zero footer
+      // pointered: classify the live view (record stats, zero footer
       // I/O for covered files) and publish a generation WITHOUT the
       // table's files — copy-on-write drop, bytes reclaimed by the sweep
       val s = org.apache.spark.sql.SparkSession.active
@@ -612,10 +616,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
         // the dropped table's own bucket marker must NOT carry forward
         fs.delete(GraftDataSource.bucketMarkerPath(staging.toString, ident.name()), false)
-        GraftDataSource.writeCarryManifest(fs, staging,
-          carried.map(f =>
-            (GraftDataSource.relativePath(root, f.path), f.size, Some(f.statsJson))))
-        Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir)
+        val entries = carried.map(Generations.carriedEntry(root, _))
+        // the dropped files' delete vectors go with them; siblings' carry
+        val dvs = GraftDataSource.carryDvEntries(conf, dir,
+          dropped.map(f => GraftDataSource.relativePath(root, f.path)).toSet)
+        GenerationRecord.stage(conf, staging, entries, dvs)
+        Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir,
+          entries, dvs)
       }
     } else {
       val files = GraftDataSource.listFiles(conf, dir)

@@ -189,9 +189,9 @@ object GraftDataSource {
       throw new OliveFormatException(
         s"generation $name not present under $dir (reclaimed by a later compaction, or never written)")
     // a partially-swept generation (its unreferenced files reclaimed, the
-    // referenced ones carried forward by a newer manifest) loses its
-    // .swap-ts marker — serving it would silently return PARTIAL data
-    if (!fs.exists(new Path(p, SwapTsName)))
+    // referenced ones carried forward by a newer record) loses its record
+    // first — serving it would silently return PARTIAL data
+    if (GenerationRecord.read(conf, p).isEmpty)
       throw new OliveFormatException(
         s"generation $name under $dir is no longer a complete snapshot " +
           "(partially reclaimed after its retention lapsed); only files " +
@@ -262,87 +262,6 @@ object GraftDataSource {
   def genIndex(name: String): Option[Int] =
     if (name.matches(GenDirPattern)) name.stripPrefix("gen-").toIntOption else None
 
-  /** Swap marker written INSIDE a generation dir just before the pointer
-    * swap makes it live: its content (epoch ms) is the generation's
-    * birth time for `TIMESTAMP AS OF`. Dir mtimes can't serve that role:
-    * appends to the LIVE generation keep bumping its mtime, which would
-    * time-travel rows out of existence. */
-  val SwapTsName = ".swap-ts"
-
-  /** Clustering record written INTO THE STAGING DIR by
-    * [[graft.operators.FormatOps.cluster]] — it rides the publish
-    * rename, so it is atomically part of the generation it describes
-    * and can never land in a generation some concurrent rewrite
-    * published in between. Lines 1-4: cols (comma-joined), binning
-    * mode, the record's member .graft file count, table name; lines 5+
-    * (since incremental-recluster support): the member file NAMES
-    * themselves ("-" = empty list sentinel), which let drift be
-    * detected by a name diff with zero per-file I/O. Living inside the
-    * gen dir buys the right lifecycle for free: restore to a
-    * pre-clustering generation and the record vanishes with it; vacuum
-    * reclaims it with its generation. Every publish CARRIES a
-    * name-tracking record forward ([[Generations.publishStaging]]) so a
-    * 1-file DML can't erase the claim for thousands of still-tiled
-    * carried files; vintage 4-line records do NOT carry (their count
-    * check can't see a count-preserving file replacement, so the old
-    * vanish-on-publish behavior remains their conservative truth).
-    * DESCRIBE diffs the record's member names against the live listing
-    * (count fallback for vintage records): appends (and the publish's
-    * own late-append fold) land unclustered files, so any drift
-    * downgrades the claim to partial rather than silently overstating
-    * prune-ability. Membership is namespace-wide — sibling-table
-    * activity downgrades conservatively (a false 'partial', never a
-    * false 'clustered'); tracking per-table would need a footer open
-    * per file at DESCRIBE time. */
-  val ClusterSpecName = ".cluster-spec"
-
-  /** ONE read of the live generation's clustering record: the
-    * (cols, binning, fileCountAtRecordTime, table) header plus the
-    * member file-name list when the record carries one (lines 5+,
-    * written since incremental-recluster support; None = vintage
-    * record). A single read is load-bearing twice over: it halves the
-    * object-store round-trips per DESCRIBE, and it makes pairing a
-    * generation-N header with generation-N+1's member list impossible
-    * (two reads race any concurrent publish). A MALFORMED record reads
-    * as absent (no claim is better than a garbled one), but a transport
-    * failure PROPAGATES — "couldn't read the record" must not render as
-    * "never clustered", or a transient object-store error sends an
-    * operator into a multi-hour re-cluster (the DESCRIBE caller
-    * degrades it to an explicit 'unknown' instead). */
-  def readClusterRecord(conf: Configuration, dir: String)
-      : Option[((String, String, Long, String), Option[Set[String]])] = {
-    val p = new Path(resolveDataDir(conf, dir), ClusterSpecName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).split("\n")
-      finally in.close()
-      if (lines.length < 4) None
-      else try {
-        val header = (lines(0).trim, lines(1).trim, lines(2).trim.toLong, lines(3).trim)
-        // "-" is the empty-list sentinel (an empty-table cluster still
-        // writes a name-tracking record; only a 4-line record is vintage)
-        val members =
-          if (lines.length <= 4) None
-          else Some(lines.drop(4).map(_.trim).filter(n => n.nonEmpty && n != "-").toSet)
-        Some((header, members))
-      } catch { case _: NumberFormatException => None }
-    }
-  }
-
-  /** Header-only view of [[readClusterRecord]]. */
-  def readClusterSpec(conf: Configuration, dir: String)
-      : Option[(String, String, Long, String)] =
-    readClusterRecord(conf, dir).map(_._1)
-
-  /** Member-list view of [[readClusterRecord]] (None = record absent or
-    * vintage; callers refuse with guidance rather than guessing
-    * membership). */
-  def readClusterSpecFiles(conf: Configuration, dir: String): Option[Set[String]] =
-    readClusterRecord(conf, dir).flatMap(_._2)
-
   /** Liveness claim written at staging-dir creation by every rewrite
     * path. The dead-data sweep reclaims a stale staging WHOLE (claim
     * included); helper writes after such a sweep would silently
@@ -353,123 +272,27 @@ object GraftDataSource {
     * fails LOUDLY when a sweep won the race. */
   val StagingClaimName = ".staging-claim"
 
-  /** Idempotency-key marker written INSIDE a generation dir before the
-    * pointer swap (rides the same atomic publish rename): holds the
-    * `idempotencyKey` of the rewrite that produced the generation. A
-    * rewrite finding its own key on the LIVE generation is a replay and
-    * becomes a no-op — what turns at-least-once drivers (foreachBatch
-    * retries) into exactly-once table folds. Delta's txnAppId/txnVersion
-    * idea mapped to generations. */
-  val RewriteTagName = ".rewrite-tag"
-
   /** Name of the `_file` metadata column (the row's source file path). */
   val FileColName = "_file"
 
-  /** Carry manifest written INSIDE a generation dir by every generation
-    * publisher ([[Generations.publishStaging]]): each line is
-    * `<bytes>\t<path relative to the TABLE ROOT>` naming a data file
-    * that is part of this generation's live view. Entries come in two
-    * kinds: CARRIED references into an OLDER generation (or a
-    * pre-pointer loose file) written by a file-granular DML — a 1-row
-    * upsert rewrites only the files that can hold matching rows and
-    * carries the other 99.99% of a 100 TB table by reference — and
-    * SELF entries for the generation's OWN fresh output, added at
-    * publish so planning stats cover every file regardless of which
-    * operation produced it. The listing dedups self entries against the
-    * physical walk by file name; the manifest is the "manifest lists
-    * data files" half of an iceberg/delta-style table format, scoped to
-    * what the sweep needs. References are FLATTENED at write time (a
-    * carried file's path points at the generation that physically holds
-    * it), so the sweep never chases chains. */
-  val CarryManifestName = ".carry"
-
-  /** Parse a generation's carry manifest: (root-relative path, bytes)
-    * per file; empty when the manifest is absent (a pre-stats-manifest
-    * generation, or stats coverage disabled by conf). */
-  def readCarryManifest(fs: FileSystem, genDir: Path): Seq[(String, Long)] =
-    readCarryManifestFull(fs, genDir).map { case (rel, size, _) => (rel, size) }
-
-  /** Manifest entries that are CARRIED references — files living OUTSIDE
-    * this generation dir, i.e. the untouched files a file-granular DML
-    * kept by reference. Excludes the generation's self-covering stats
-    * entries for its own fresh output (same manifest, different kind). */
+  /** A generation's CARRIED references — files living outside its own
+    * dir, i.e. the untouched files a file-granular DML kept by reference:
+    * (root-relative path, bytes). Empty when the generation has no
+    * record. */
   def readCarriedRefs(fs: FileSystem, genDir: Path): Seq[(String, Long)] =
-    readCarryManifest(fs, genDir).filterNot(_._1.startsWith(genDir.getName + "/"))
-
-  /** Full manifest rows including the optional third field: the carried
-    * file's per-chunk zone-map stats ([[graft.format.Stats.statsToJson]]),
-    * which lets DML candidate selection prune manifest-covered files with
-    * zero per-file I/O. */
-  def readCarryManifestFull(fs: FileSystem, genDir: Path): Seq[(String, Long, Option[String])] = {
-    val p = new Path(genDir, CarryManifestName)
-    try {
-      if (!fs.exists(p)) return Seq.empty
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-        val parts = line.split('\t')
-        require(parts.length >= 2 && parts(0).nonEmpty,
-          s"corrupt carry manifest line in $p: '$line'")
-        (parts(1), parts(0).toLong,
-          if (parts.length >= 3 && parts(2).nonEmpty) Some(parts(2)) else None)
-      }
-    } catch {
-      case _: java.io.FileNotFoundException => Seq.empty // swept mid-read
-    }
-  }
-
-  /** Staged-stats sidecar: footer stats of a STAGING dir's own fresh
-    * output, accumulated by [[GraftBatchWrite.commit]] from the write
-    * tasks' commit messages (same line format as the carry manifest,
-    * STAGING-relative rel paths — no generation prefix).
-    * [[Generations.publishStaging]] consumes it to build the
-    * generation's self-covering manifest entries without re-opening a
-    * single footer, then deletes it BEFORE the publish rename — the
-    * sidecar never publishes, and a conflicted retry (rare) simply
-    * falls back to footer reads for its re-built entries. */
-  val StagedStatsName = ".staged-stats"
-
-  def readStagedStats(fs: FileSystem, stagingDir: Path): Seq[(String, Long, String)] = {
-    val p = new Path(stagingDir, StagedStatsName)
-    try {
-      if (!fs.exists(p)) return Seq.empty
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).flatMap { line =>
-        val parts = line.split('\t')
-        if (parts.length >= 3 && parts(1).nonEmpty)
-          // toLong guarded too: a corrupt size field is a corrupt line,
-          // and a corrupt line degrades to a footer read, never a failure
-          scala.util.Try((parts(1), parts(0).toLong, parts(2))).toOption
-        else None // a torn/corrupt line degrades to a footer read, never a failure
-      }
-    } catch { case _: java.io.IOException => Seq.empty }
-  }
-
-  /** Merge `entries` ((staging-relative rel, bytes, statsJson)) into the
-    * sidecar. Per-table write commits run sequentially on the driver, so
-    * read-merge-write needs no lock. */
-  def appendStagedStats(fs: FileSystem, stagingDir: Path,
-      entries: Seq[(String, Long, String)]): Unit = {
-    if (entries.isEmpty) return
-    val existing = readStagedStats(fs, stagingDir)
-    val have = existing.map(_._1).toSet
-    val add = entries.filterNot(e => have.contains(e._1))
-    if (add.isEmpty) return
-    AtomicPublish.text(sessionConf(), new Path(stagingDir, StagedStatsName),
-      (existing ++ add).map { case (rel, sz, js) => s"$sz\t$rel\t$js" }
-        .mkString("\n"))
-  }
+    GenerationRecord.read(fs.getConf, genDir).toSeq
+      .flatMap(_.carried(genDir.getName)).map(e => (e.rel, e.bytes))
 
   /** Append-stats sidecars: a PLAIN APPEND's footer stats, written next
-    * to the files it landed (`.stats-append-<uuid>`, same line format as
-    * the staged-stats sidecar, TABLE-ROOT-relative rels). The carry
-    * manifest only covers files that existed at the last publish, so
+    * to the files it landed (`.stats-append-<uuid>`, one
+    * `<bytes>\t<TABLE-ROOT-relative rel>\t<stats json>` line per file).
+    * The generation record only covers files that existed at the last
+    * publish, so
     * without these every appended file is a scheduled task until the
     * next DML/compaction — at 100 TB an append-mostly table would
     * degrade to full task waves (caught by the r16 sf1 run: q141's
     * post-rename append scheduled all 32 files). Planning merges them
-    * under the carry entries; they are ADVISORY — a lost or stale
+    * under the record's entries; they are ADVISORY — a lost or stale
     * sidecar costs pruning, never correctness. Unique names make
     * concurrent appends race-free; a fold pass keeps the file count
     * bounded; an overwrite deletes them with the data; sidecars in
@@ -490,7 +313,7 @@ object GraftDataSource {
     // bound the sidecar count: many appends between publishes fold into
     // one file once they pile up. Planners read-only (a swept input
     // degrades them to footer reads); per-table write commits run
-    // sequentially on the driver, same contract appendStagedStats uses.
+    // sequentially on the driver, so read-merge-write needs no lock.
     val all = try fs.listStatus(dataDir).map(_.getPath)
         .filter(_.getName.startsWith(AppendStatsPrefix)).toSeq
       catch { case _: java.io.IOException => Seq.empty }
@@ -514,16 +337,6 @@ object GraftDataSource {
         else None // torn/corrupt line: degrade to a footer read, never fail
       }
     } catch { case _: java.io.IOException => Seq.empty } // folded/swept mid-read
-
-  def writeCarryManifest(fs: FileSystem, genDir: Path,
-      entries: Seq[(String, Long, Option[String])]): Unit =
-    // atomic publish: a concurrent DML's entry sweep reads SURVIVOR
-    // manifests (fresh stagings included) to compute its pinned-file
-    // set — it must see a complete manifest or none, never a torn line
-    AtomicPublish.text(GraftDataSource.sessionConf(), new Path(genDir, CarryManifestName),
-      entries.map { case (rel, size, stats) =>
-        s"$size\t$rel" + stats.map("\t" + _).getOrElse("") }
-        .sorted.mkString("\n"))
 
   /** Session switches for SQL DML semantics, one per command (the
     * Iceberg write.delete/update/merge.mode split): `copy-on-write`
@@ -552,86 +365,49 @@ object GraftDataSource {
     * deletes on. Files are immutable, so the pair never moves. */
   val PosColName = "_pos"
 
-  /** Delete-vector manifest written INSIDE a generation dir, next to
-    * `.carry`: each line is
-    * `<table>\t<root-relative data file>\t<root-relative DV blob>\t<cardinality>`
-    * naming a [[graft.format.Dv]] blob that holds the data file's deleted
-    * row positions AS OF this generation. Like `.carry`, references are
-    * FLATTENED (the blob path points at the generation that physically
-    * holds it), so carrying a file's DV across rewrites never chases
-    * chains, and time travel reads each generation's own view. */
-  val DvManifestName = ".dvs"
-
-  /** One `.dvs` manifest's rows: (table, relDataFile, relDvBlob, cardinality). */
-  def readDvManifest(fs: FileSystem, genDir: Path): Seq[(String, String, String, Long)] = {
-    val p = new Path(genDir, DvManifestName)
-    try {
-      if (!fs.exists(p)) return Seq.empty
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).map { line =>
-        val parts = line.split('\t')
-        require(parts.length == 4 && parts.forall(_.nonEmpty),
-          s"corrupt DV manifest line in $p: '$line'")
-        (parts(0), parts(1), parts(2), parts(3).toLong)
-      }
-    } catch {
-      case _: java.io.FileNotFoundException => Seq.empty // swept mid-read
-    }
-  }
-
-  def writeDvManifest(fs: FileSystem, genDir: Path,
-      entries: Seq[(String, String, String, Long)]): Unit =
-    if (entries.nonEmpty)
-      AtomicPublish.text(sessionConf(), new Path(genDir, DvManifestName),
-        entries.map { case (t, rel, dv, n) => s"$t\t$rel\t$dv\t$n" }
-          .sorted.mkString("\n"))
-
   /** The LIVE view's delete vectors for `table`: absolute-URI data-file
-    * path → (absolute DV blob path, cardinality). Empty for tables with
-    * no generation pointer (merge-on-read commits always publish one) or
-    * no `.dvs`. When `table` is None (single-table files), any entry of
-    * any table matches — callers using None are conservative guards. */
+    * path → (absolute DV blob path, cardinality), from the generation
+    * record's `dvs`. Empty for tables with no generation pointer
+    * (merge-on-read commits always publish one). When `table` is None
+    * (single-table files), any entry of any table matches — callers
+    * using None are conservative guards. */
   def liveDvs(conf: Configuration, dir: String,
       table: Option[String]): Map[String, (Path, Long)] =
-    liveDvsAt(conf, dir, resolveDataDir(conf, dir), table)
+    atLiveView(conf, dir)(liveDvsAt(conf, dir, _, table))
 
   /** [[liveDvs]] against an ALREADY-resolved data dir — lets a caller
     * pair the DV set with a listing of the SAME generation (the scan's
-    * consistency snapshot) instead of re-resolving and racing a swap. */
+    * consistency snapshot) instead of re-resolving and racing a swap. A
+    * generation without a record is mid-reclaim: FileNotFound, which the
+    * snapshot's retry loop re-resolves. */
   def liveDvsAt(conf: Configuration, dir: String, resolved: String,
       table: Option[String]): Map[String, (Path, Long)] = {
     // `dir` may BE a generation dir (time travel pins one directly) —
-    // its `.dvs` applies and paths resolve against the TABLE root (the
+    // its record applies and paths resolve against the TABLE root (the
     // gen dir's parent), exactly like carried data-file references
     val (genDir, root) =
       if (resolved != dir) (new Path(resolved), new Path(dir))
       else if (genIndex(new Path(dir).getName).isDefined)
         (new Path(dir), new Path(dir).getParent)
       else return Map.empty
-    val fs = genDir.getFileSystem(conf)
+    val rec = GenerationRecord.read(conf, genDir).getOrElse(throw new java.io.FileNotFoundException(
+      s"${GenerationRecord.path(genDir)} (generation mid-reclaim)"))
     val rootUri = root.toUri.getPath.stripSuffix("/")
-    readDvManifest(fs, genDir)
-      .filter { case (t, _, _, _) => table.forall(_ == t) }
-      .map { case (_, rel, dv, n) =>
-        s"$rootUri/$rel" -> (new Path(root, dv), n)
-      }.toMap
+    rec.deleteVectors.filter(d => table.forall(_ == d.table))
+      .map(d => s"$rootUri/${d.file}" -> (new Path(root, d.blob), d.cardinality)).toMap
   }
 
-  /** Carry the live generation's `.dvs` entries into a rewrite's staging,
-    * minus the entries of data files the rewrite REPLACED (their rows
-    * were re-written without the deleted ones — a carried DV would
-    * re-delete positions of a different file). Sibling tables' entries
-    * always carry. Shared by [[Generations.rewriteTable]], the SQL COW
-    * commit, and the merge-on-read commit (which then overlays its own
-    * fresh entries). */
-  def carryDvEntries(fs: FileSystem, conf: Configuration, dir: String,
-      replacedRel: Set[String]): Seq[(String, String, String, Long)] = {
-    val resolved = resolveDataDir(conf, dir)
-    if (resolved == dir) return Seq.empty
-    readDvManifest(fs, new Path(resolved))
-      .filterNot { case (_, rel, _, _) => replacedRel.contains(rel) }
-  }
+  /** The live generation's delete vectors minus the entries of data files
+    * a rewrite REPLACED (their rows were re-written without the deleted
+    * ones — a carried DV would re-delete positions of a different file).
+    * Sibling tables' entries always carry. Shared by
+    * [[Generations.rewriteTable]], [[Generations.rewriteFiles]], the SQL
+    * COW commit, and the merge-on-read commit (which then overlays its
+    * own fresh entries). */
+  def carryDvEntries(conf: Configuration, dir: String,
+      replacedRel: Set[String]): Seq[GenerationRecord.DvEntry] =
+    GenerationRecord.live(conf, dir).toSeq.flatMap(_.deleteVectors)
+      .filterNot(d => replacedRel.contains(d.file))
 
   /** Copy sibling tables' bucket markers from the live data dir into a
     * rewrite's staging (the rewrite re-created at most its OWN table's
@@ -650,7 +426,7 @@ object GraftDataSource {
   }
 
   /** The complete view of one PUBLISHED generation — its own files plus
-    * its carry manifest's references — regardless of where the pointer
+    * its record's references — regardless of where the pointer
     * currently points. The optimistic-DML rebase path reads the race
     * winner's view through this: at rebase time the winner's `gen-N`
     * rename has landed (that is what the loser collided with) but its
@@ -661,15 +437,6 @@ object GraftDataSource {
       genName: String): Seq[(Path, Long, Map[String, String])] =
     listPartitionedSizedAt(conf, dir, new Path(dir, genName).toString,
       viaPointer = false)
-
-  /** [[liveCarryStats]] pinned to one generation dir (the rebase path's
-    * zero-I/O classification over the race winner's manifest). */
-  private[sources] def genCarryStats(conf: Configuration, dir: String,
-      genName: String): Map[String, String] = {
-    val p = new Path(dir, genName)
-    readCarryManifestFull(p.getFileSystem(conf), p)
-      .flatMap { case (rel, _, js) => js.map(rel -> _) }.toMap
-  }
 
   /** The catalog's declared-schema marker for `table` under `dir`, if
     * present and parseable — the path API consults it so DML reads agree
@@ -692,77 +459,32 @@ object GraftDataSource {
       }
     } catch { case _: Exception => None }
 
-  /** rel → stats-json for every stats-carrying entry of the LIVE
-    * generation's manifest; empty for pointerless tables or manifests
-    * written before stats rode along. */
-  def liveCarryStats(conf: Configuration, dir: String): Map[String, String] = {
-    val resolved = resolveDataDir(conf, dir)
-    if (resolved == dir) Map.empty
-    else {
-      val p = new Path(resolved)
-      readCarryManifestFull(p.getFileSystem(conf), p)
-        .flatMap { case (rel, _, js) => js.map(rel -> _) }.toMap
-    }
-  }
-
-  /** [[liveCarryStats]] PARSED, cached per generation MANIFEST identity
-    * (path + the `.carry` file's mtime and length — an `overwrite` can
-    * delete every generation and a later DML re-create the same
-    * `gen-00001` path with different content, and the late-append fold
-    * can grow a published manifest in place, so the path alone is not
-    * an identity). The parse is shared JVM-wide; without this every
-    * scan re-read and re-parsed the same manifest JSON — AQE and
-    * multi-statement pipelines plan scans constantly, and the per-scan
-    * parse throttled whole pipelines. A stale entry can only LOSE
-    * pruning, never mis-prune (entries are keyed by globally-unique
-    * file names), but the identity key makes even that window one
-    * getFileStatus wide. */
+  /** Planning-time zone maps of the live view, PARSED: the live record's
+    * entries plus the append-stats sidecars, which cover what the record
+    * can't — files landed since the last publish (and EVERYTHING on a
+    * never-published plain table). Both parses are served from
+    * [[GenerationRecord]]'s identity-keyed cache, so planning the same
+    * view twice parses nothing. A stale entry can only LOSE pruning,
+    * never mis-prune (entries are keyed by globally-unique file names). */
   def parsedCarryStats(conf: Configuration,
       dir: String): Map[String, Seq[graft.format.Meta.TableMeta]] = {
     val resolved = resolveDataDir(conf, dir)
     val p = new Path(resolved)
     val fs = p.getFileSystem(conf)
-    // append-stats sidecars cover what the carry manifest can't: files
-    // landed since the last publish (and EVERYTHING on a never-published
-    // plain table, where resolved == dir and no carry exists)
     val sidecars = (try fs.listStatus(p).toSeq catch {
       case _: java.io.IOException => Seq.empty
     }).filter(_.getPath.getName.startsWith(AppendStatsPrefix))
-    val carrySt = if (resolved == dir) None
-      else try Some(fs.getFileStatus(new Path(p, CarryManifestName))) catch {
-        case _: java.io.FileNotFoundException => None
-        case _: java.io.IOException => None
-      }
-    if (carrySt.isEmpty && sidecars.isEmpty) return Map.empty
-    val carryStamp = carrySt.map(s => s"${s.getModificationTime}:${s.getLen}").getOrElse("-")
-    val sideStamp = sidecars.map(s =>
-      s"${s.getPath.getName}:${s.getModificationTime}:${s.getLen}").sorted.mkString(",")
-    val key = s"$resolved@$carryStamp@${sideStamp.hashCode}:${sidecars.size}"
-    val cached = parsedStatsCache.get(key)
-    if (cached != null) cached
-    else {
-      manifestParses.incrementAndGet()
-      val raw = carrySt.map(_ => readCarryManifestFull(fs, p)
-          .flatMap { case (rel, _, js) => js.map(rel -> _) }).getOrElse(Seq.empty) ++
-        sidecars.flatMap(s => readAppendStatsFile(fs, s.getPath)
-          .map { case (rel, _, js) => rel -> js })
-      val parsed = inParallel(raw) { case (rel, js) =>
+    // a record swept mid-planning costs pruning here; the listing's own
+    // guard is what refuses the partial view
+    val fromRecord = if (resolved == dir) Map.empty[String, Seq[graft.format.Meta.TableMeta]]
+      else GenerationRecord.read(conf, p).map(_.parsedStats).getOrElse(Map.empty)
+    if (sidecars.isEmpty) fromRecord
+    else fromRecord ++ sidecars.flatMap(st => GenerationRecord.cached(st) {
+      inParallel(readAppendStatsFile(fs, st.getPath)) { case (rel, _, js) =>
         graft.format.Stats.statsFromJson(js).map(rel -> _)
       }.flatten.toMap
-      parsedStatsCache.put(key, parsed)
-      parsed
-    }
-  }
-  /** Cache-miss counter for [[parsedCarryStats]] — planning the same live
-    * view twice must parse the manifest once (PlanningSoakSpec). */
-  private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
-  private val parsedStatsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Map[String, Seq[graft.format.Meta.TableMeta]]](
-        64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[String, Seq[graft.format.Meta.TableMeta]]])
-          : Boolean = size() > 256
     })
+  }
 
   /** Appender's half of the append-vs-rewrite race guard (shared by the
     * batch commit and every streaming epoch commit): if the pointer
@@ -1028,24 +750,6 @@ object GraftDataSource {
     p.toUri.getPath.stripPrefix(if (b.endsWith("/")) b else b + "/")
   }
 
-  def readSwapTs(conf: Configuration, genDir: Path): Option[Long] =
-    try {
-      val p = new Path(genDir, SwapTsName)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        s.toLongOption
-      }
-    } catch {
-      // a grace-sweep reclaiming this generation between the caller's
-      // listing and this read: fall back to mtime; if the gen is truly
-      // gone, addressing it fails loudly downstream in generationDir
-      case _: java.io.IOException => None
-    }
-
   /** The live generation's name from `dir`'s pointer, if any. Reads race
     * the swap's rename, so two transient errors retry (bounded):
     * FileNotFound (pointer replaced between exists() and open()) and
@@ -1110,23 +814,31 @@ object GraftDataSource {
     * retry-then-throw, never Seq.empty. */
   def listPartitionedSized(conf: Configuration, dir: String): Seq[(Path, Long, Map[String, String])] = {
     listingCalls.incrementAndGet()
+    atLiveView(conf, dir)(resolved =>
+      listPartitionedSizedAt(conf, dir, resolved, resolved != dir))
+  }
+
+  /** Run `f` against `dir`'s resolved data dir, re-resolving (bounded)
+    * when it throws FileNotFound — the one retry loop for every reader
+    * that must see one complete generation. */
+  private[sources] def atLiveView[T](conf: Configuration, dir: String)(f: String => T): T = {
     var attempt = 0
     while (true) {
-      val resolved = resolveDataDir(conf, dir)
-      val viaPointer = resolved != dir
-      try return listPartitionedSizedAt(conf, dir, resolved, viaPointer)
+      try return f(resolveDataDir(conf, dir))
       catch {
         case e: java.io.FileNotFoundException =>
           // the view we were walking was replaced under us: the pointer's
-          // generation was reclaimed mid-walk (its .swap-ts marker —
-          // removed FIRST by every sweep, before any data file — is the
-          // tell), or a first rewrite published a pointer while we walked
-          // the loose-file layout. Re-resolve and retry (bounded).
+          // generation was reclaimed mid-walk (its record — removed FIRST
+          // by every sweep, before any data file — is the tell), or a
+          // first rewrite published a pointer while we walked the
+          // loose-file layout. Re-resolve and retry (bounded).
           attempt += 1
           if (attempt > 5) throw new graft.format.OliveFormatException(
             s"live view of $dir kept changing during planning " +
               s"($attempt attempts): concurrent rewrites are sweeping " +
-              "faster than this scan can plan; raise spark.graft.graceMs", e)
+              "faster than this scan can plan (raise spark.graft.graceMs), " +
+              s"or its generation has no ${GenerationRecord.Name} record " +
+              "(not a complete generation)", e)
           Thread.sleep(5L * attempt) // outlast a pointer swap in flight
       }
     }
@@ -1144,23 +856,25 @@ object GraftDataSource {
       return Seq.empty
     }
     // Sweep-race guard, pre-walk half: every sweep removes a generation's
-    // `.swap-ts` marker BEFORE touching any of its data files, so a
-    // pointer-resolved dir with no marker is mid-reclaim (or a corrupt
-    // half-publish) — never walk it, a partial walk would silently drop
-    // rows. Two fs.exists round-trips per planning-time listing buy the
-    // invariant "marker present after the walk ⇒ the walk saw every file".
+    // record BEFORE touching any of its data files, so a pointer-resolved
+    // dir with no record is mid-reclaim (or was never a complete
+    // generation) — never walk it, a partial walk would silently drop
+    // rows. The record read here and one exists() after the walk buy the
+    // invariant "record present after the walk ⇒ the walk saw every file".
     // A generation-PINNED read (time travel resolved the gen dir itself,
     // so resolved == dir and viaPointer is false) gets the same guard:
-    // generationDir validated the marker at resolve time, and a sweep
+    // generationDir validated the record at resolve time, and a sweep
     // that partially reclaims the generation mid-walk must surface as a
     // loud retry/error, never a quiet partial snapshot.
     // strict pattern: a plain directory that HAPPENS to be named gen-1
     // is not a generation (genIndex agrees) and must not be required to
-    // carry a .swap-ts marker to be readable
+    // carry a record to be readable
     val genPinned = genIndex(root.getName).isDefined
-    val marker = new Path(root, SwapTsName)
-    if ((viaPointer || genPinned) && !fs.exists(marker))
-      throw new java.io.FileNotFoundException(s"$marker (generation mid-reclaim)")
+    val marker = GenerationRecord.path(root)
+    val record =
+      if (!viaPointer && !genPinned) None
+      else Some(GenerationRecord.read(conf, root).getOrElse(
+        throw new java.io.FileNotFoundException(s"$marker (generation mid-reclaim)")))
     val rootStatus = fs.getFileStatus(root)
     if (rootStatus.isFile) return Seq((root, rootStatus.getLen, Map.empty[String, String]))
     val out = Seq.newBuilder[(Path, Long, Map[String, String])]
@@ -1181,11 +895,11 @@ object GraftDataSource {
       }
     }
     // a file-granular DML generation carries its untouched files by
-    // reference: manifest entries are relative to the TABLE ROOT (the
-    // gen dir's parent), partition values ride the relative path's
-    // `k=v` components exactly as they would a walked path. Sizes come
-    // from the manifest — planning a carried 10^6-file view costs zero
-    // extra stat calls.
+    // reference: record entries are relative to the TABLE ROOT (the gen
+    // dir's parent), partition values ride the relative path's `k=v`
+    // components exactly as they would a walked path. Sizes come from the
+    // record — planning a carried 10^6-file view costs zero extra stat
+    // calls. Self entries dedup against the walk by name.
     //
     // Re-home vs late-append-fold race: a publish's fold can add a
     // by-reference entry for a late append in the same instant the
@@ -1196,7 +910,7 @@ object GraftDataSource {
     // already produced is exactly that race's leftover: drop it, the
     // physical location wins (keeping both would double the rows; keeping
     // only the ref fails the read on a path that no longer exists).
-    readCarryManifest(fs, root).foreach { case (rel, size) =>
+    record.toSeq.flatMap(_.files).foreach { case GenerationRecord.FileEntry(rel, size, _) =>
       if (!walkedNames.contains(new Path(rel).getName)) {
         val part = rel.split('/').dropRight(1).iterator
           .filter(_.contains("=")).map { seg =>
@@ -1206,8 +920,8 @@ object GraftDataSource {
         out += ((new Path(root.getParent, rel), size, part))
       }
     }
-    // Sweep-race guard, post-walk half: a marker still present AFTER the
-    // walk proves no sweep began before the walk finished (markers go
+    // Sweep-race guard, post-walk half: a record still present AFTER the
+    // walk proves no sweep began before the walk finished (records go
     // first), so the listing is complete. For a pointerless walk, a
     // pointer APPEARING mid-walk means a first rewrite published (and
     // with a tiny grace may already have reclaimed loose files under
@@ -1482,47 +1196,40 @@ class GraftTable(dirs: Seq[String], schema: StructType, options: CaseInsensitive
         // answers from metadata even while vectors are live
         "deleteVectors.exactCount" -> "true")
     }
-    // clustering claim, when the live generation carries one: which
-    // columns z-order pruning can rely on, and whether post-clustering
-    // appends have diluted it (exact file-count match = every live file
-    // tiles the z-curve; drift = some files postdate the rewrite). The
-    // drift check costs one live listing per DESCRIBE on a clustered
-    // table — the price of a freshness claim that is CHECKED, not
-    // recalled, and it shares the listing with the stats block above. A
-    // transport failure reading the record degrades to an explicit
-    // 'unknown' row, never to silence (silence reads as never-clustered
-    // and triggers pointless re-clustering).
-    // ONE record read serves both the header and the member list — two
-    // reads would pay double object-store round-trips and could pair
-    // generation N's header with generation N+1's members across a
-    // concurrent publish
-    val clusterSpecOrErr =
+    // clustering claim, when the live generation's record carries one:
+    // which columns z-order pruning can rely on, and whether
+    // post-clustering appends have diluted it (member names = the live
+    // listing means every live file tiles the z-curve; drift = some files
+    // postdate the rewrite). The drift check costs one live listing per
+    // DESCRIBE on a clustered table — the price of a freshness claim that
+    // is CHECKED, not recalled, and it shares the listing with the stats
+    // block above. A transport failure reading the record degrades to an
+    // explicit 'unknown' row, never to silence (silence reads as
+    // never-clustered and triggers pointless re-clustering).
+    val clusterOrErr =
       if (dirs.size != 1) Right(None)
-      else try Right(GraftDataSource.readClusterRecord(
-        GraftDataSource.sessionConf(), dirs.head))
+      else try Right(GenerationRecord.live(GraftDataSource.sessionConf(), dirs.head)
+        .flatMap(_.cluster))
       // NonFatal, not just IOException: an object-store client's
       // RuntimeException or a resolveDataDir refusal must degrade the
       // CLAIM to 'unknown', not break the whole DESCRIBE (matching the
       // neighboring sizedListing block's breadth)
       catch { case scala.util.control.NonFatal(e) => Left(e) }
-    val clustering = clusterSpecOrErr match {
+    val clustering = clusterOrErr match {
       case Left(_) =>
         Map("clustering.state" ->
           "unknown (cluster record unreadable; claim not checkable)")
-      case Right(spec) => spec match {
-      case Some(((cols, binning, recorded, clusteredTable), members))
-          if clusteredTable == tbl.map(_._2).getOrElse("data") =>
-        // records with a member NAME list (since incremental-recluster
-        // support) are checked name-exactly: a DML that replaces one
-        // file while keeping the count equal must read as partial, not
-        // 'clustered' — the replacement never saw the z-key. Vintage
-        // records fall back to the count check (namespace-wide, so
-        // sibling-table activity downgrades conservatively — a false
+      case Right(Some(c)) if c.table == tbl.map(_._2).getOrElse("data") =>
+        // checked name-exactly: a DML that replaces one file while keeping
+        // the count equal must read as partial, not 'clustered' — the
+        // replacement never saw the z-key. Membership is namespace-wide,
+        // so sibling-table activity downgrades conservatively (a false
         // 'partial', never a false 'clustered').
-        val state = (sizedListing, members) match {
-          case (None, _) =>
+        val state = sizedListing match {
+          case None =>
             "unknown (live listing unavailable; claim not checkable)"
-          case (Some(live), Some(ms)) =>
+          case Some(live) =>
+            val ms = c.members.toSet
             val names = live.map(_._1.getName).toSet
             val drift = names -- ms
             if (drift.isEmpty && names == ms) "clustered"
@@ -1532,21 +1239,10 @@ class GraftTable(dirs: Seq[String], schema: StructType, options: CaseInsensitive
                 "incremental => true) to recluster just the drift)"
             else s"partial (${(ms -- names).size} clustered files left the " +
               "live view since the rewrite)"
-          case (Some(live), None) => live.size.toLong match {
-            case now if now == recorded => "clustered"
-            case now if now > recorded =>
-              s"partial (${now - recorded} of $now live namespace files " +
-                "postdate the clustering rewrite — run sys.cluster(" +
-                "incremental => true) to recluster just the drift)"
-            case now =>
-              s"partial (namespace file count shrank from $recorded to $now " +
-                "since the clustering rewrite)"
-          }
         }
-        Map("clustering.columns" -> cols, "clustering.binning" -> binning,
-          "clustering.state" -> state)
+        Map("clustering.columns" -> c.cols.mkString(","),
+          "clustering.binning" -> c.binning, "clustering.state" -> state)
       case _ => Map.empty[String, String]
-      }
     }
     (base ++ tbl ++ bucket ++ sort ++ stats ++ dv ++ clustering).asJava
   }
@@ -2081,36 +1777,17 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
     * lazy vals force at different plan phases (estimateStatistics /
     * planInputPartitions / createReaderFactory), and a DML committing in
     * between could otherwise pair gen-N's files with gen-N+1's DV set,
-    * silently resurrecting or double-deleting rows. The `.dvs` manifest
-    * is read BEFORE the listing walk: the walk's sweep-race marker guard
-    * proves the generation stayed intact through it, which then also
-    * vouches for the earlier manifest read. */
+    * silently resurrecting or double-deleting rows. Both come from the
+    * generation's one record, read before the listing walk: the walk's
+    * sweep-race guard proves the generation stayed intact through it. */
   private lazy val viewSnapshot: (Seq[(org.apache.hadoop.fs.Path, Long, Map[String, String])],
       Map[String, (String, Long)]) = {
     val parts = dirs.map { d =>
-      var attempt = 0
-      var out: Option[(Seq[(org.apache.hadoop.fs.Path, Long, Map[String, String])],
-        Map[String, (Path, Long)])] = None
-      while (out.isEmpty) {
-        val resolved = GraftDataSource.resolveDataDir(conf, d)
-        try {
-          val dv = GraftDataSource.liveDvsAt(conf, d, resolved, tableOpt)
-          GraftDataSource.listingCalls.incrementAndGet() // observability parity
-          val l = GraftDataSource.listPartitionedSizedAt(conf, d, resolved, resolved != d)
-          out = Some((l, dv))
-        } catch {
-          case e: java.io.FileNotFoundException =>
-            // the generation was reclaimed mid-walk; re-resolve (bounded,
-            // same contract as listPartitionedSized's own retry loop)
-            attempt += 1
-            if (attempt > 5) throw new graft.format.OliveFormatException(
-              s"live view of $d kept changing during planning " +
-                s"($attempt attempts): concurrent rewrites are sweeping " +
-                "faster than this scan can plan; raise spark.graft.graceMs", e)
-            Thread.sleep(5L * attempt)
-        }
+      GraftDataSource.listingCalls.incrementAndGet() // observability parity
+      GraftDataSource.atLiveView(conf, d) { resolved =>
+        val dv = GraftDataSource.liveDvsAt(conf, d, resolved, tableOpt)
+        (GraftDataSource.listPartitionedSizedAt(conf, d, resolved, resolved != d), dv)
       }
-      out.get
     }
     (parts.flatMap(_._1),
       parts.flatMap(_._2).map { case (k, (p, n)) => k -> (p.toString, n) }.toMap)
@@ -2124,11 +1801,10 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
     }
   }
 
-  /** Per-file zone maps parsed from the live carry manifest(s), keyed by
-    * URI path: FILE-level pruning at PLANNING time, zero per-file I/O.
-    * Files the manifest doesn't cover (plain appends since the last
-    * publish,
-    * pointerless tables, pre-stats manifests) simply stay unpruned —
+  /** Per-file zone maps parsed from the live generation record(s), keyed
+    * by URI path: FILE-level pruning at PLANNING time, zero per-file I/O.
+    * Files the record doesn't cover (plain appends without a stats
+    * sidecar) simply stay unpruned —
     * their chunks still skip inside readers from footer stats. Parsed
     * once per scan, and only on first use from a filtered consumer. */
   private lazy val manifestMetas: Map[String, Seq[graft.format.Meta.TableMeta]] =
@@ -2142,8 +1818,8 @@ class GraftScan(dirs: Seq[String], required: StructType, tableOpt: Option[String
   /** Live delete vectors of this scan's view (merge-on-read DELETE
     * sidecars), keyed by data-file URI path → (DV blob path, deleted
     * count). Empty for tables that never saw an MoR delete — the read
-    * path then pays nothing. Resolved once per scan from the `.dvs`
-    * manifest next to the carry manifest. */
+    * path then pays nothing. Resolved once per scan from the generation
+    * record. */
   private lazy val dvByUri: Map[String, (String, Long)] = viewSnapshot._2
 
   /** True iff the live manifest PROVES file `p` holds no row of the
@@ -3937,61 +3613,53 @@ class GraftBatchWrite(dir: String, schema: StructType, truncate: Boolean,
     * half is the publish-time late-append fold in
     * [[Generations.publishStaging]]): if the generation pointer moved
     * while this append was writing, its files may sit in a superseded
-    * generation the new manifest never saw. The two halves meet at the
+    * generation the new record never saw. The two halves meet at the
     * pointer swap: a file visible before it is folded by the
     * publisher's re-list; one visible after it observes the moved
     * pointer here. The common case costs exactly one pointer read. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val conf = GraftDataSource.sessionConf()
+    val target = new Path(dir)
+    // the tasks' footer stats, (rel to `root`, bytes, stats json)
+    def stats(root: Path): Seq[(String, Long, String)] = messages.iterator.collect {
+      case m: GraftCommitMessage => m.statsJson
+    }.flatten.map { case (abs, (sz, js)) =>
+      (GraftDataSource.relativePath(root, new Path(abs)), sz, js) }.toSeq
     if (truncate) {
       // overwrite rebuilt the table root outright — no race guard, no
       // sketch merge. Its own fresh output still self-covers with an
       // append-stats sidecar so the new table plans pruned from write 1
-      val conf0 = GraftDataSource.sessionConf()
-      val root0 = new Path(dir)
-      GraftDataSource.writeAppendStats(conf0, new Path(resolvedDataDir),
-        messages.iterator.collect { case m: GraftCommitMessage => m.statsJson }
-          .flatten.map { case (abs, (sz, js)) =>
-            (GraftDataSource.relativePath(root0, new Path(abs)), sz, js)
-          }.toSeq)
+      GraftDataSource.writeAppendStats(conf, new Path(resolvedDataDir), stats(target))
       return
     }
-    val conf = GraftDataSource.sessionConf()
     GraftDataSource.ensureAppendVisibility(conf, dir, resolvedDataDir, messages)
     GraftDataSource.mergeAppendStats(conf, dir, table, messages)
-    // a STAGING target (a rewrite building its next generation): persist
-    // the tasks' footer stats so publishStaging's self-covering manifest
-    // never re-opens a footer this very job just wrote. Appends (table
-    // root target) skip — their stats merge above, and live generations
-    // don't carry the sidecar.
-    val target = new Path(dir)
-    // the name pattern alone could false-positive on a user table whose
-    // root happens to match; a REAL staging dir always carries the
-    // liveness claim claimStaging stamped at creation — require both, so
-    // a coincidental name never accumulates a permanent sidecar in a
-    // live data dir (only publishStaging ever deletes it).
+    // a STAGING target (a rewrite building its next generation): add the
+    // tasks' footer stats to the staging's record so the publish never
+    // re-opens a footer this very job just wrote. Rels are root-relative
+    // (`gen-N.tmp-<uuid>/…`); the publish re-prefixes them. The name
+    // pattern alone could false-positive on a user table whose root
+    // happens to match; a REAL staging dir always carries the liveness
+    // claim claimStaging stamped at creation — require both, so a
+    // coincidental name never grows a record in a live data dir.
     if (target.getName.matches("gen-\\d+\\.tmp-.*") &&
         target.getFileSystem(conf).exists(
           new Path(target, GraftDataSource.StagingClaimName))) {
-      val entries = messages.iterator.collect {
-        case m: GraftCommitMessage => m.statsJson
-      }.flatten.map { case (abs, (sz, js)) =>
-        (GraftDataSource.relativePath(target, new Path(abs)), sz, js)
-      }.toSeq
-      GraftDataSource.appendStagedStats(target.getFileSystem(conf), target, entries)
+      val entries = stats(target.getParent).map { case (rel, sz, js) =>
+        GenerationRecord.FileEntry(rel, sz, Some(js)) }
+      if (entries.nonEmpty) GenerationRecord.updateStaging(conf, target) { r =>
+        val have = entries.map(_.rel).toSet
+        r.copy(files = r.files.filterNot(e => have.contains(e.rel)) ++ entries)
+      }
     } else {
-      // PLAIN APPEND into the live data dir: the carry manifest (if any)
-      // predates these files, so without a sidecar every one of them is
-      // a scheduled task for every later filtered scan until the next
+      // PLAIN APPEND into the live data dir: the generation record (if
+      // any) predates these files, so without a sidecar every one of them
+      // is a scheduled task for every later filtered scan until the next
       // publish. Rels are TABLE-ROOT-relative (the same key space the
-      // carry manifest uses). Re-homed files (pointer moved mid-write)
-      // keep their pre-move paths here — their entries just never match
-      // a listed file, which costs pruning, never correctness.
-      val entries = messages.iterator.collect {
-        case m: GraftCommitMessage => m.statsJson
-      }.flatten.map { case (abs, (sz, js)) =>
-        (GraftDataSource.relativePath(target, new Path(abs)), sz, js)
-      }.toSeq
-      GraftDataSource.writeAppendStats(conf, new Path(resolvedDataDir), entries)
+      // record uses). Re-homed files (pointer moved mid-write) keep their
+      // pre-move paths here — their entries just never match a listed
+      // file, which costs pruning, never correctness.
+      GraftDataSource.writeAppendStats(conf, new Path(resolvedDataDir), stats(target))
     }
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = {}

@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * changed/new rows flow to ordinary data-file writers — then ONE commit
   * publishes a generation that carries every untouched live data file by
   * reference plus per-file delete-vector sidecars ([[graft.format.Dv]]
-  * blobs, referenced from the `.dvs` manifest next to `.carry`). A
+  * blobs, referenced from the generation's record). A
   * 100-row DELETE against a 100 TB table writes kilobytes; a 100-row
   * UPDATE writes kilobytes of DV plus one small file of replacement
   * rows. Readers subtract the positions from their decode ranges.
@@ -218,7 +218,7 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
       // opens. Blob names are assigned positionally BEFORE the sweep so
       // the parallel writes stay deterministic.
       val work = newPerFile.toSeq.sortBy(_._1).filter(_._2.nonEmpty).zipWithIndex
-      case class DvOut(rel: String, entry: Option[(String, String, String, Long)],
+      case class DvOut(rel: String, entry: Option[GenerationRecord.DvEntry],
           fullyDeleted: Boolean, churn: Long)
       val outs = GraftDataSource.inParallel(work) { case ((fileStr, fresh0), blobIdx) =>
         val uriPath = new Path(fileStr).toUri.getPath
@@ -259,29 +259,28 @@ private[sources] class GraftMorBatchWrite(dir: String, table: String,
           val blobName = s"_dv/dv-$blobIdx.dvg"
           val out = fs.create(new Path(staging, blobName), false)
           try out.write(graft.format.Dv.encode(merged0)) finally out.close()
-          DvOut(rel, Some((table, rel, s"$nextGen/$blobName", merged0.length.toLong)),
+          DvOut(rel, Some(GenerationRecord.DvEntry(table, rel, s"$nextGen/$blobName",
+            merged0.length.toLong)),
             fullyDeleted = false, churn)
         }
       }
       val churnBytes = outs.map(_.churn).sum
-      val newEntries = Seq.newBuilder[(String, String, String, Long)]
-      outs.flatMap(_.entry).foreach(newEntries += _)
       val dropped = outs.filter(_.fullyDeleted).map(_.rel).toSet
       val targets = outs.map(_.rel).toSet
       // carry every live data file by reference (minus fully-deleted
       // ones), stats riding along so the next DML keeps zero-footer-I/O
-      GraftDataSource.writeCarryManifest(fs, staging,
-        listed.map { case (p, size, _) =>
-          val rel = GraftDataSource.relativePath(root, p)
-          (rel, size, statsByRel.get(rel))
-        }.filterNot { case (rel, _, _) => dropped.contains(rel) })
+      val carried = listed.map { case (p, size, _) =>
+        val rel = GraftDataSource.relativePath(root, p)
+        GenerationRecord.FileEntry(rel, size, statsByRel.get(rel))
+      }.filterNot(e => dropped.contains(e.rel))
       // sibling tables' DV entries carry verbatim; this table's entries
       // for re-DV'd files were merged into the fresh blobs above
-      val carriedDv = GraftDataSource.carryDvEntries(fs, conf, dir,
-        targets ++ dropped)
-      GraftDataSource.writeDvManifest(fs, staging, carriedDv ++ newEntries.result())
+      val dvs = GraftDataSource.carryDvEntries(conf, dir, targets ++ dropped) ++
+        outs.flatMap(_.entry)
+      GenerationRecord.stage(conf, staging, carried, dvs)
       GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
       Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir,
+        carried, dvs,
         sourceView = Some((srcDir, listed.map(_._1.toUri.getPath).toSet)))
       GraftDataSource.recordChurn(SparkSession.active, dir, table, churnBytes)
     } catch {

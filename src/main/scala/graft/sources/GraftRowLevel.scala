@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * "groups" (files) that may hold affected rows, the rewritten rows flow
   * through the write below, and commit publishes a new generation that
   * holds the replacement files physically and carries every untouched
-  * live file BY REFERENCE in the generation's `.carry` manifest — the
+  * live file BY REFERENCE in the generation's record — the
   * same file-granular COW as [[Generations.rewriteTable]], so a 1-row
   * SQL MERGE against a 100 TB table rewrites the files its keys can
   * touch, not the table.
@@ -176,7 +176,7 @@ class GraftCowScanBuilder(op: GraftRowLevelOperation, dir: String,
 }
 
 /** The replacement write: rows land in a `gen-N.tmp-*` staging dir via
-  * the ordinary [[GraftBatchWrite]]; commit writes the `.carry` manifest
+  * the ordinary [[GraftBatchWrite]]; commit stages the carried entries
   * (live files minus the replaced set, by reference at their original
   * location) and publishes the generation atomically — crash before
   * commit leaves only unreferenced staging for the next sweep, identical
@@ -224,7 +224,7 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
     inner.commit(messages)
     val replaced = op.replaced.getOrElse(throw new IllegalStateException(
       "row-level write committed before its scan planned; no replaced-file " +
-        "set to anchor the carry manifest")).map(_.toString).toSet
+        "set to anchor the carried entries")).map(_.toString).toSet
     // pin the source view for the publish's late-append fold
     val srcDir = GraftDataSource.resolveDataDir(conf, dir)
     val commitListing = GraftDataSource.listPartitionedSized(conf, dir)
@@ -235,19 +235,18 @@ class GraftCowBatchWrite(op: GraftRowLevelOperation, dir: String,
     GraftDataSource.carryBucketMarkers(fs, conf, dir, staging)
     // carried files keep their zone-map stats — from the scan's own
     // classification (covers files carried for the FIRST time) with the
-    // live manifest as fallback; immutable files, stats never stale
-    GraftDataSource.writeCarryManifest(fs, staging,
-      carried.map { case (p, size, _) =>
-        val rel = GraftDataSource.relativePath(root, p)
-        (rel, size, op.fileStats.get(rel)) })
+    // live record as fallback; immutable files, stats never stale
+    val entries = carried.map { case (p, size, _) =>
+      val rel = GraftDataSource.relativePath(root, p)
+      GenerationRecord.FileEntry(rel, size, op.fileStats.get(rel)) }
     // carried files keep their delete vectors (the candidate read applied
     // DVs, so replaced files' rewritten rows shed theirs); sibling
     // tables' entries carry verbatim
-    GraftDataSource.writeDvManifest(fs, staging,
-      GraftDataSource.carryDvEntries(fs, conf, dir,
-        replaced.map(s => GraftDataSource.relativePath(root, new Path(s)))))
+    val dvs = GraftDataSource.carryDvEntries(conf, dir,
+      replaced.map(s => GraftDataSource.relativePath(root, new Path(s))))
+    GenerationRecord.stage(conf, staging, entries, dvs)
     Generations.publishStaging(fs, conf, root, staging, nextGen, None, dir,
-      sourceView = Some((srcDir, commitListing.map(_._1.toUri.getPath).toSet)))
+      entries, dvs, sourceView = Some((srcDir, commitListing.map(_._1.toUri.getPath).toSet)))
     // stats lifecycle: the replaced files' rows were churned by this
     // DELETE/UPDATE/MERGE — bill their bytes against the ANALYZE snapshot
     GraftDataSource.recordChurn(SparkSession.active, dir, table,

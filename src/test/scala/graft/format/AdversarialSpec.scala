@@ -319,4 +319,53 @@ class AdversarialSpec extends SparkSpec {
     intercept[OliveFormatException](Meta.read(bytes ++ Array[Byte](0)))
     intercept[OliveFormatException](Meta.read(bytes.dropRight(1)))
   }
+
+  test("generation record codec round-trips and refuses damage") {
+    import graft.sources.GenerationRecord._
+    // a tag is stored verbatim (surrounding spaces, a newline), and a
+    // cluster column may itself hold a comma
+    val rec = Record(born = Some(1234L), tag = Some(" batch-1 \n"),
+      files = Seq(FileEntry("b.graft", 5L, None),
+        FileEntry("gen-00001/a.graft", 10L, Some("[]"))),
+      deleteVectors = Seq(DvEntry("t", "b.graft", "gen-00001/_dv/dv-0.dvg", 3L)),
+      cluster = Some(Cluster(Seq("a,b", "c"), "quantile", "t", Seq("a.graft", "b.graft"))))
+    val json = toJson(rec)
+    assert(fromJson(json, "r") == rec)
+    assert(fromJson(toJson(Record()), "r") == Record())
+    for (bad <- Seq(json.dropRight(1), json + "{}", "[]", "",
+        json.replace("\"bytes\":5", "\"bytes\":-5"),
+        json.replace("\"format\":1", "\"format\":2"))) {
+      val e = intercept[OliveFormatException](fromJson(bad, "the/record"))
+      assert(e.getMessage.contains("the/record"), e.getMessage)
+    }
+  }
+
+  test("a truncated or non-JSON generation record is refused, never read as empty") {
+    import graft.sources.{GenerationRecord, Generations}
+    val dir = Files.createTempDirectory("graft-adv-record").toString
+    spark.range(0, 100).selectExpr("id").write.format("graft").mode("overwrite").save(dir)
+    Generations.rewrite(spark, dir, (_, df) => df) // publishes gen-00001
+    val record = Paths.get(GenerationRecord.path(new Path(dir, "gen-00001")).toUri.getPath)
+    val good = Files.readAllBytes(record)
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[OliveFormatException] &&
+          c.getMessage.contains(record.toString))
+      assert(named, s"$what: want an OliveFormatException naming $record, got $e")
+    }
+    for ((damage, bytes) <- Seq("truncated" -> good.take(good.length / 2),
+        "non-JSON" -> "not a record".getBytes("UTF-8"))) {
+      Files.write(record, bytes)
+      refused(s"$damage: scan")(spark.read.format("graft").load(dir).collect())
+      refused(s"$damage: time travel")(
+        spark.read.format("graft").option("generation", "1").load(dir).collect())
+      refused(s"$damage: verify_table")(graft.operators.FormatOps.verifyTable(spark, dir))
+      // history still lists the generation, with no birth or tag
+      assert(Generations.historyRows(new Configuration(), dir)
+        .map(r => (r._1, r._3, r._4)) == Seq((1, None, None)))
+    }
+    Files.write(record, good)
+    assert(spark.read.format("graft").load(dir).count() == 100)
+  }
 }

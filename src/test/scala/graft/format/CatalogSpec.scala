@@ -135,15 +135,14 @@ class CatalogSpec extends SparkSpec {
     val e = intercept[Exception](
       spark.sql("SELECT * FROM graft_cattt.db6.t VERSION AS OF 9").collect())
     assert(e.getMessage.contains("never made live"), e.getMessage)
-    // TIMESTAMP AS OF: pin birth markers so the cut points are
+    // TIMESTAMP AS OF: pin the records' births so the cut points are
     // deterministic (and survive appends, which bump dir mtimes)
-    val fs = new Path(root).getFileSystem(new Configuration())
     def pinBirth(gen: String, ts: String): Unit = {
-      val p = new Path(s"$root/db6/$gen/.swap-ts")
-      val out = fs.create(p, true)
-      try out.write(java.sql.Timestamp.valueOf(ts).getTime.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      val conf = new Configuration()
+      val genDir = new Path(s"$root/db6/$gen")
+      val rec = graft.sources.GenerationRecord.read(conf, genDir).get
+      graft.sources.GenerationRecord.write(conf, genDir,
+        rec.copy(born = Some(java.sql.Timestamp.valueOf(ts).getTime)))
     }
     pinBirth("gen-00001", "2019-01-01 00:00:00")
     pinBirth("gen-00002", "2021-01-01 00:00:00")

@@ -17,6 +17,10 @@ class ClusterSpec extends SparkSpec {
   /** Fraction of the live generation's chunks a [lo, hi) range filter on
     * `c` skips, judged straight from footer stats with the scan's own
     * [[Stats.canSkip]]. */
+  /** The live clustering claim's member file names. */
+  private def members(conf: Configuration, dir: String): Option[Set[String]] =
+    graft.sources.GenerationRecord.live(conf, dir).flatMap(_.cluster).map(_.members.toSet)
+
   private def skippedFraction(dir: String, c: String, lo: Long, hi: Long): Double = {
     val conf = new Configuration()
     val files = graft.sources.GraftDataSource.listFiles(conf, dir)
@@ -195,14 +199,13 @@ class ClusterSpec extends SparkSpec {
     val clustered = fileState()
     assert(clustered.size == 8)
     // the record carries member names now
-    val members0 = graft.sources.GraftDataSource.readClusterSpecFiles(conf, dir)
+    val members0 = members(conf, dir)
     assert(members0.exists(_ == clustered.keySet), s"member list wrong: $members0")
     // drift: append NEW high keys (the realistic shape — monotonic ids),
     // shuffled so the drift file itself is unclustered
     spark.range(40000, 44000).selectExpr("id AS k", "id % 7 AS v").coalesce(1)
       .write.format("graft").option("chunkrows", "512").mode("append").save(dir)
-    val spec1 = graft.sources.GraftDataSource.readClusterSpec(conf, dir).get
-    assert(spec1._3 == 8 && fileState().size == 9, "drift fixture wrong")
+    assert(members(conf, dir).get.size == 8 && fileState().size == 9, "drift fixture wrong")
 
     val n = FormatOps.clusterIncremental(spark, dir, "data")
     assert(n == 1, s"expected exactly the 1 drift file reclustered, got $n")
@@ -213,10 +216,9 @@ class ClusterSpec extends SparkSpec {
     }
     // the record's count equals the live listing again (DESCRIBE reports
     // 'clustered') and the member list covers every live file
-    val spec2 = graft.sources.GraftDataSource.readClusterSpec(conf, dir).get
-    assert(spec2._3 == after.size.toLong, s"record ${spec2._3} != live ${after.size}")
-    assert(graft.sources.GraftDataSource.readClusterSpecFiles(conf, dir)
-      .exists(_ == after.keySet))
+    val recorded = members(conf, dir).get.size
+    assert(recorded == after.size, s"record $recorded != live ${after.size}")
+    assert(members(conf, dir).exists(_ == after.keySet))
     // content preserved exactly
     val t = spark.read.format("graft").load(dir)
     assert(t.count() == 44000L)
@@ -230,7 +232,7 @@ class ClusterSpec extends SparkSpec {
     assert(fileState() == after)
   }
 
-  test("record carry across DML: name-tracking records survive, vintage records don't") {
+  test("cluster record survives a COW DML and reads name-exactly") {
     val conf = new Configuration()
     val dir = Files.createTempDirectory("graft-zorder-carry").toString
     spark.range(0, 8000).selectExpr("id AS k", "id % 5 AS v")
@@ -242,33 +244,18 @@ class ClusterSpec extends SparkSpec {
     FormatOps.updateWhere(spark, dir, "data",
       Map("v" -> org.apache.spark.sql.functions.lit(-1L)),
       org.apache.spark.sql.functions.col("k") === 17L)
-    val rec = graft.sources.GraftDataSource.readClusterRecord(conf, dir)
+    val rec = graft.sources.GenerationRecord.live(conf, dir).flatMap(_.cluster)
     assert(rec.isDefined, "name-tracking record must carry across a COW DML")
-    val (hdr, members) = rec.get
-    assert(hdr._1 == "k" && members.isDefined)
+    assert(rec.get.cols == Seq("k"))
+    val members = rec.get.members.toSet
     val live = graft.sources.GraftDataSource.listFiles(conf, dir).map(_.getName).toSet
-    assert(members.get != live,
+    assert(members != live,
       "the DML's replacement file must NOT read as a cluster member")
-    assert((live -- members.get).nonEmpty)
+    assert((live -- members).nonEmpty)
     // incremental recluster repairs exactly the replacement
     assert(FormatOps.clusterIncremental(spark, dir, "data") >= 1)
-    assert(graft.sources.GraftDataSource.readClusterSpecFiles(conf, dir)
+    assert(this.members(conf, dir)
       .exists(_ == graft.sources.GraftDataSource.listFiles(conf, dir).map(_.getName).toSet))
-
-    // VINTAGE (4-line) records do not carry: their count check cannot
-    // see a count-preserving replacement, so vanish-on-publish remains
-    // the honest claim for them
-    val resolved = new org.apache.hadoop.fs.Path(
-      graft.sources.GraftDataSource.resolveDataDir(conf, dir))
-    graft.sources.AtomicPublish.text(conf,
-      new org.apache.hadoop.fs.Path(resolved,
-        graft.sources.GraftDataSource.ClusterSpecName),
-      "k\nsort\n4\ndata") // 4 lines, no member list
-    FormatOps.updateWhere(spark, dir, "data",
-      Map("v" -> org.apache.spark.sql.functions.lit(-2L)),
-      org.apache.spark.sql.functions.col("k") === 23L)
-    assert(graft.sources.GraftDataSource.readClusterRecord(conf, dir).isEmpty,
-      "a vintage record must not carry across a publish")
   }
 
   test("incremental recluster refuses without a record or member list") {

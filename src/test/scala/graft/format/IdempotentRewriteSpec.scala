@@ -57,19 +57,38 @@ class IdempotentRewriteSpec extends SparkSpec {
     spark.range(0, 10).selectExpr("id", "CAST(1 AS BIGINT) AS v")
       .write.format("graft").mode("overwrite").save(dir)
     Generations.rewrite(spark, dir, (_, df) => df) // establish gen-1
-    // simulate a rewrite that crashed after publishing data but before
-    // the pointer swap: a published-but-unswapped gen dir with a tag
+    // simulate a rewrite that crashed after publishing but before the
+    // pointer swap: a published-but-unswapped gen dir whose record holds
+    // the tag, crashed longer ago than the grace window
     val root = new java.io.File(dir)
     val phantom = new java.io.File(root, "gen-00002")
     assert(phantom.mkdir())
-    java.nio.file.Files.writeString(phantom.toPath.resolve(".rewrite-tag"), "batch-9")
+    graft.sources.GenerationRecord.write(new Configuration(),
+      new org.apache.hadoop.fs.Path(phantom.getPath),
+      graft.sources.GenerationRecord.Record(born = Some(System.currentTimeMillis()),
+        tag = Some("batch-9")))
+    assert(phantom.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
     // the tag is NOT live (pointer still names gen-1), so the keyed
-    // retry must apply, allocating past the phantom
+    // retry must apply; its entry sweep reclaims the stale phantom
     Generations.rewrite(spark, dir,
       (_, df) => df.withColumn("v", col("v") + 1L),
       idempotencyKey = Some("batch-9"))
     val t = spark.read.format("graft").load(dir).agg(sum("v")).head.getLong(0)
     assert(t == 20, "retry after pre-swap crash must apply the fold")
     assert(Generations.liveRewriteTag(new Configuration(), dir) == Some("batch-9"))
+  }
+
+  test("a key with leading and trailing spaces replays as a no-op") {
+    val dir = Files.createTempDirectory("graft-idem-space").toString
+    spark.range(0, 100).selectExpr("id", "CAST(1 AS BIGINT) AS v")
+      .write.format("graft").mode("overwrite").save(dir)
+    def fold(): Unit =
+      Generations.rewrite(spark, dir,
+        (_, df) => df.withColumn("v", col("v") + 1L), idempotencyKey = Some(" batch-1 "))
+    fold()
+    fold()
+    val total = spark.read.format("graft").load(dir).agg(sum("v")).head.getLong(0)
+    assert(total == 200, "replayed batch was applied twice")
+    assert(Generations.liveRewriteTag(new Configuration(), dir) == Some(" batch-1 "))
   }
 }

@@ -65,10 +65,9 @@ class IncrementalClusterSoakSpec extends SparkSpec {
           s"round $round rewrote settled file $name — cost is no longer ∝ drift")
       }
       // the record tells the truth: count == live, members == live names
-      val spec = graft.sources.GraftDataSource.readClusterSpec(conf, dir).get
-      assert(spec._3 == now.size.toLong, s"round $round: record ${spec._3} != live ${now.size}")
-      assert(graft.sources.GraftDataSource.readClusterSpecFiles(conf, dir)
-        .exists(_ == now.keySet), s"round $round: member list drifted from listing")
+      val members = graft.sources.GenerationRecord.live(conf, dir).flatMap(_.cluster).get.members
+      assert(members.size == now.size, s"round $round: record ${members.size} != live ${now.size}")
+      assert(members.toSet == now.keySet, s"round $round: member list drifted from listing")
       settled = now
     }
     // content exact after the full history

@@ -3,11 +3,10 @@ package graft.format
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.GraftDataSource
+import graft.sources.{GenerationRecord, GraftDataSource}
 
 /** Bucket-preserving merge-on-read UPDATE/MERGE: replacement rows are
   * clustered by the declared bucket key, routed through the bucketed
@@ -36,11 +35,8 @@ class MorBucketUpdateSpec extends SparkSpec {
     GraftDataSource.listPartitionedSized(conf, dir)
       .map { case (p, size, _) => p.getName -> size }.toMap
 
-  private def dvRows(dir: String): Long = {
-    val resolved = GraftDataSource.resolveDataDir(conf, dir)
-    GraftDataSource.readDvManifest(
-      new Path(resolved).getFileSystem(conf), new Path(resolved)).map(_._4).sum
-  }
+  private def dvRows(dir: String): Long =
+    GenerationRecord.live(conf, dir).toSeq.flatMap(_.deleteVectors).map(_.cardinality).sum
 
   test("MoR UPDATE on a bucketed+sorted table adds only bucket-tagged files") {
     val root = mkCatalog("morb1")

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.GraftDataSource
+import graft.sources.{GenerationRecord, GraftDataSource}
 
 /** Merge-on-read DELETE ([[graft.sources.GraftMorDeleteOperation]]):
   * position-delete vectors instead of file rewrites, applied by the
@@ -36,10 +36,24 @@ class MorDeleteSpec extends SparkSpec {
       GraftDataSource.relativePath(new Path(dir), p) -> (st.getLen, st.getModificationTime)
     }.toMap
 
-  private def liveDvEntries(dir: String): Seq[(String, String, String, Long)] = {
-    val resolved = GraftDataSource.resolveDataDir(conf, dir)
-    GraftDataSource.readDvManifest(
-      new Path(resolved).getFileSystem(conf), new Path(resolved))
+  private def liveDvEntries(dir: String): Seq[(String, String, String, Long)] =
+    GenerationRecord.live(conf, dir).toSeq.flatMap(_.deleteVectors)
+      .map(d => (d.table, d.file, d.blob, d.cardinality))
+
+  test("a sibling table's CTAS and DROP keep the live delete vectors") {
+    mkCatalog("morsib")
+    spark.range(0, 1000).selectExpr("id AS k", "id % 7 AS v").repartition(2)
+      .createOrReplaceTempView("morsib_src")
+    spark.sql("CREATE TABLE morsib.db.t AS SELECT * FROM morsib_src")
+    withMor { spark.sql("DELETE FROM morsib.db.t WHERE k % 10 = 0") }
+    assert(spark.table("morsib.db.t").count() == 900)
+    // both publish a new generation carrying t's files by reference: the
+    // files' delete vectors must ride along, or the deleted rows return
+    spark.sql("CREATE TABLE morsib.db.t2 AS SELECT id AS k FROM range(10)")
+    assert(spark.table("morsib.db.t").count() == 900, "a sibling CTAS resurrected rows")
+    spark.sql("DROP TABLE morsib.db.t2")
+    assert(spark.table("morsib.db.t").count() == 900, "a sibling DROP resurrected rows")
+    assert(spark.table("morsib.db.t").filter(col("k") % 10 === 0).count() == 0)
   }
 
   test("sparse MoR DELETE: zero data files rewritten, exact survivors") {
@@ -272,16 +286,16 @@ class MorDeleteSpec extends SparkSpec {
     assert(spark.table("mor8.db.t").count() == 900)
     assert(graft.operators.FormatOps.verifyTable(spark, dir, Some("t")).forall(_._2))
     val resolvedGen = new Path(GraftDataSource.resolveDataDir(conf, dir))
-    val entries = GraftDataSource.readDvManifest(fs, resolvedGen)
-    GraftDataSource.writeDvManifest(fs, resolvedGen,
-      entries.map { case (t2, r2, d2, n2) => (t2, r2, d2, n2 + 1) })
+    val truth = GenerationRecord.read(conf, resolvedGen).get
+    GenerationRecord.write(conf, resolvedGen, truth.copy(deleteVectors =
+      truth.deleteVectors.map(d => d.copy(cardinality = d.cardinality + 1))))
     val lyingReport = graft.operators.FormatOps.verifyTable(spark, dir, Some("t"))
     val lyingDv = lyingReport.filter(_._1.contains(".dvg"))
     assert(lyingDv.size == 1 && !lyingDv.head._2 &&
       lyingDv.head._5.exists(_.contains("manifest claims")),
       s"lying manifest cardinality not flagged: $lyingReport")
     // put the truth back so later tests over this warehouse stay clean
-    GraftDataSource.writeDvManifest(fs, resolvedGen, entries)
+    GenerationRecord.write(conf, resolvedGen, truth)
     assert(spark.table("mor8.db.t").count() == 900)
     val _ = rel
   }

@@ -12,7 +12,7 @@ import graft.sources.{Generations, GraftDataSource}
 
 /** File-granular copy-on-write DML: a small upsert/delete rewrites only
   * the files that can hold touched rows and carries the rest by
-  * reference in the generation's `.carry` manifest — the property that
+  * reference in the generation's record — the property that
   * makes a 1-row MERGE O(touched files), not O(table), at 100 TB. */
 class SelectiveRewriteSpec extends SparkSpec {
   private val conf = new Configuration()
@@ -59,6 +59,22 @@ class SelectiveRewriteSpec extends SparkSpec {
       val st = new Path(dir).getFileSystem(conf).getFileStatus(new Path(dir, rel))
       assert(st.getModificationTime == mt, s"$rel was rewritten, not carried")
     }
+  }
+
+  test("a keyed upsert's generation holds its data files plus one metadata file") {
+    val dir = Files.createTempDirectory("graft-selective-record").toString
+    writeRangeClustered(dir)
+    import spark.implicits._
+    val batch = Seq((5L, 999L, "patched", "update_postimage"))
+      .toDF("id", "v", "s", "_change_type")
+    FormatOps.applyCdcBatch(spark, dir, "data", batch, Seq("id"), Some("batch-1"))
+    val genDir = new Path(dir, GraftDataSource.readGenPointer(conf, dir).get)
+    val names = genDir.getFileSystem(conf).listStatus(genDir).toSeq
+      .filter(_.isFile).map(_.getPath.getName)
+    assert(names.exists(_.endsWith(".graft")), s"no data file published: $names")
+    val metadata = names.filterNot(n => n.endsWith(".graft") || n.endsWith(".crc"))
+    assert(metadata == Seq(graft.sources.GenerationRecord.Name),
+      s"want exactly the generation record beside the data, got $metadata")
   }
 
   test("delete with a range predicate prunes to the overlapping files only") {
@@ -170,8 +186,8 @@ class SelectiveRewriteSpec extends SparkSpec {
       // gen-1 lost its unreferenced files after its grace lapsed: time
       // travel to it must fail LOUDLY, never serve partial rows
       val fs = new Path(dir).getFileSystem(conf)
-      val gen1SwapTs = new Path(new Path(dir, "gen-00001"), GraftDataSource.SwapTsName)
-      if (!fs.exists(gen1SwapTs)) {
+      val gen1Record = graft.sources.GenerationRecord.path(new Path(dir, "gen-00001"))
+      if (!fs.exists(gen1Record)) {
         val e = intercept[Exception] {
           spark.read.format("graft").option("generation", "1").load(dir).count()
         }

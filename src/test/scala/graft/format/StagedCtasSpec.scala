@@ -67,9 +67,8 @@ class StagedCtasSpec extends SparkSpec {
       (0L until 1000L).map(_ % 5).sum)
     // t1's bytes were carried by reference, not copied: the new gen's
     // carry manifest references them
-    val carried = GraftDataSource.readCarryManifest(
-      new org.apache.hadoop.fs.Path(dir).getFileSystem(conf),
-      new org.apache.hadoop.fs.Path(dir, gen2))
+    val carried = graft.sources.GenerationRecord.read(conf,
+      new org.apache.hadoop.fs.Path(dir, gen2)).get.files
     assert(carried.nonEmpty, "sibling files must carry by reference")
     // the pre-CTAS generation still time-travels
     assert(spark.read.format("graft").option("generation", gen1.replaceAll("[^0-9]", "").toInt.toString)

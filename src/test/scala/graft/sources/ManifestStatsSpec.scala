@@ -17,6 +17,10 @@ import graft.operators.FormatOps
 class ManifestStatsSpec extends SparkSpec {
   private val conf = new Configuration()
 
+  private def recordEntries(dir: String, gen: String): Seq[(String, Long, Option[String])] =
+    GenerationRecord.read(conf, new Path(dir, gen)).get.files
+      .map(e => (e.rel, e.bytes, e.stats))
+
   private def seed(dir: String): Unit =
     spark.range(0, 8000).selectExpr("id", "id % 7 AS v", "CAST(id AS STRING) AS s")
       .repartitionByRange(8, col("id"))
@@ -27,8 +31,7 @@ class ManifestStatsSpec extends SparkSpec {
     seed(dir)
     FormatOps.deleteWhere(spark, dir, "data", col("id") < 100)
     val live = GraftDataSource.readGenPointer(conf, dir).get
-    val full = GraftDataSource.readCarryManifestFull(
-      new Path(dir).getFileSystem(conf), new Path(dir, live))
+    val full = recordEntries(dir, live)
     assert(full.size >= 7)
     full.foreach { case (rel, _, js) =>
       val metas = js.flatMap(graft.format.Stats.statsFromJson)
@@ -73,8 +76,7 @@ class ManifestStatsSpec extends SparkSpec {
     assert(live.agg(min("id"), max("id")).head() ==
       org.apache.spark.sql.Row(100L, 7899L))
     val gen = GraftDataSource.readGenPointer(conf, dir).get
-    val full = GraftDataSource.readCarryManifestFull(
-      new Path(dir).getFileSystem(conf), new Path(dir, gen))
+    val full = recordEntries(dir, gen)
     assert(full.size >= 7) // 6 untouched originals + gen-1's physical file
     assert(full.count(_._3.isDefined) >= 6,
       "reused carried entries must keep their stats")

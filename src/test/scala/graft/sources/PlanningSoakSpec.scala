@@ -35,28 +35,28 @@ class PlanningSoakSpec extends SparkSpec {
     // reference with stats
     FormatOps.deleteWhere(spark, dir, "data", col("id") === 100L)
     val genDir = new Path(GraftDataSource.resolveDataDir(conf, dir))
-    val fs = genDir.getFileSystem(conf)
-    val existing = GraftDataSource.readCarryManifestFull(fs, genDir)
+    val record = GenerationRecord.read(conf, genDir).get
+    val existing = record.files
     // 3 carried refs + 1 self-covering entry for the DML's own output
-    val carried = existing.filterNot(_._1.startsWith(genDir.getName + "/"))
+    val carried = record.carried(genDir.getName)
     assert(carried.size == 3 && existing.size == 4 &&
-      existing.forall(_._3.isDefined))
+      existing.forall(_.stats.isDefined))
     // every CARRIED file's range sits above the probe key (50): any of
     // their stats serves as the phantom template (the self entry's range
     // covers the key and must not be the template)
-    val (_, templSize, templStats) = carried.head
+    val templ = carried.head
     // physical(1) + carried(3) + phantoms = TotalFiles in the listing
     // (the self entry dedups against the physical walk by name)
     val phantoms = (0 until TotalFiles - 1 - carried.size).map(i =>
-      (f"phantom-$i%05d.graft", templSize, templStats))
-    GraftDataSource.writeCarryManifest(fs, genDir, existing ++ phantoms)
+      templ.copy(rel = f"phantom-$i%05d.graft"))
+    GenerationRecord.write(conf, genDir, record.copy(files = existing ++ phantoms))
 
     assert(GraftDataSource.listPartitionedSized(conf, dir).size == TotalFiles)
 
     def planOnce(): (Seq[String], Long, Long, Long) = {
       val sel = spark.read.format("graft").load(dir).filter(col("id") === 50L)
       val opens0 = graft.format.GraftFileReader.opens.get()
-      val parses0 = GraftDataSource.manifestParses.get()
+      val parses0 = GenerationRecord.manifestParses.get()
       val t0 = System.nanoTime()
       val scheduled = sel.queryExecution.executedPlan.collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
@@ -68,7 +68,7 @@ class PlanningSoakSpec extends SparkSpec {
       val wallMs = (System.nanoTime() - t0) / 1000000L
       (scheduled,
         graft.format.GraftFileReader.opens.get() - opens0,
-        GraftDataSource.manifestParses.get() - parses0,
+        GenerationRecord.manifestParses.get() - parses0,
         wallMs)
     }
 
@@ -98,7 +98,7 @@ class PlanningSoakSpec extends SparkSpec {
     assert(rows.length == 1 && rows.head.getLong(0) == 50L)
 
     // an unselective scan over the soak view would read phantoms — put
-    // the real manifest back so later suites' temp-dir sweeps stay sane
-    GraftDataSource.writeCarryManifest(fs, genDir, existing)
+    // the real record back so later suites' temp-dir sweeps stay sane
+    GenerationRecord.write(conf, genDir, record)
   }
 }

@@ -14,7 +14,7 @@ class RewriteRaceSpec extends SparkSpec {
 
   private def rewriteWith(dir: String, targets: Set[String]) =
     Generations.rewriteFiles(spark, dir, "data",
-      _ => true, (df, _) => df, (_, _, _) => (), requireTargets = targets)
+      _ => true, (df, _) => df, _ => None, requireTargets = targets)
 
   test("empty live view + outstanding targets refuses as concurrent change") {
     val dir = java.nio.file.Files.createTempDirectory("graft_race_empty").toString
