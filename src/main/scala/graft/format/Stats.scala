@@ -570,7 +570,7 @@ object Stats {
 
   // ---- one-pass key-prune builder ------------------------------------------
 
-  /** Mutable per-partition key-sketch state for [[keyPrune]]'s single
+  /** Mutable per-partition key-sketch state for [[keyPruneFull]]'s single
     * tree-aggregate: a distinct-value set capped at `cap` entries (null
     * once exceeded — overflow is a one-way door) plus typed bounds
     * running in the SAME pass (projected i64, raw UTF-8 bytes, or wide
@@ -617,16 +617,26 @@ object Stats {
     }
   }
 
-  /** [[keyPrune]]'s result plus what the same pass learned about the
+  /** One key column's prune plus what the same pass learned about the
     * batch: non-null row count, and the exact distinct-key count when it
     * fit the cap (None past it). A single-key MERGE admission check
     * falls out for free — duplicates exist iff `rows > distinct`. */
   final case class KeyPruneResult(prune: Option[Prune], rows: Long,
       distinct: Option[Int])
 
-  /** One key column's candidate-file prune for a keyed DML, built in ONE
-    * pass over the batch (plus one bitmap pass only for over-cap
-    * i64-projectable keys):
+  /** The distinct-key cap past which a key column's prune stops being
+    * an exact IN-list and becomes a typed summary. */
+  val PruneCap = 1000
+
+  /** One key column's candidate-file prune for a keyed DML: the
+    * single-column case of [[keyPruneFull]]. None = no prune from this
+    * column (remaining conjuncts still apply). */
+  def keyPrune(key: org.apache.spark.sql.DataFrame,
+      cap: Int = PruneCap): Option[Prune] = keyPruneFull(key, cap).head.prune
+
+  /** Every column of `keys` sketched in ONE pass over the batch (plus one
+    * bitmap pass per over-cap i64-projectable column), one
+    * [[KeyPruneResult]] per column, in column order:
     *
     *  - ≤ `cap` distinct keys → an exact [[FilterPrune]] IN-list, the
     *    strongest prune (zone maps AND blooms refute it per chunk).
@@ -639,77 +649,95 @@ object Stats {
     *    [[KeyBytesRange]]; wide decimals → [[KeyDecimalRange]] — both
     *    with ZERO extra jobs.
     *
-    * Replaces the distinct+limit probe / (min,max) / bitmap three-job
-    * chain: the capped set rides a tree-aggregate with NO shuffle (each
+    * The capped sets ride a tree-aggregate with NO shuffle (each
     * partition's distinct set is capped at `cap`+1 before it moves), so
-    * a keyed DML costs one batch pass regardless of key count. None =
-    * no prune from this column (remaining conjuncts still apply). */
-  def keyPrune(keys: org.apache.spark.sql.DataFrame,
-      cap: Int = 1000): Option[Prune] = keyPruneFull(keys, cap).prune
-
-  /** [[keyPrune]] exposing the pass's row/distinct counts (see
-    * [[KeyPruneResult]]). */
+    * a keyed DML costs one batch pass regardless of key count. When the
+    * projected keys plan as a bare local table scan (a `LocalRelation`
+    * input) the sketch runs on the driver and no job is started. Nulls
+    * match no target row, so each column skips its own nulls. */
   def keyPruneFull(keys: org.apache.spark.sql.DataFrame,
-      cap: Int = 1000): KeyPruneResult = {
-    val f = keys.schema.fields.head
-    val name = f.name
-    val kcol = keys.col(name)
-    val nn = keys.filter(kcol.isNotNull)
-    val proj = i64Proj(nn.col(name), f.dataType)
-    val scale = f.dataType match {
-      case d: DecimalType => d.scale
-      case _ => -1
-    }
-    // mode: how the sketch reads each row. 1 = i64 projection in col 1;
-    // 2 = string, raw bytes in BOTH cols (bytes are the IN-list literals
-    // AND the bounds); 3 = wide decimal, value in col 0; 0 = plain
-    // (IN-list only; no over-cap summary exists for the type)
-    val (mode, selected) = f.dataType match {
-      case _ if proj.isDefined => (1, nn.select(kcol, proj.get.as("_p")))
-      case StringType => (2, nn.select(kcol.cast(BinaryType).as("_b")))
-      case d: DecimalType if d.precision > 18 => (3, nn.select(kcol))
-      case _ => (0, nn.select(kcol))
-    }
-    val sk = selected.rdd.treeAggregate(new KeySketch(cap))(
-      (a, row) => {
-        mode match {
-          case 1 =>
-            a.add(row.get(0))
-            a.boundL(row.getLong(1))
-          case 2 =>
-            val b = row.getAs[Array[Byte]](0)
-            a.add(new BytesKey(b))
-            a.boundB(b)
-          case 3 =>
-            val d = row.getDecimal(0)
-            a.add(d)
-            a.boundD(d)
-          case _ => a.add(plainKey(row.get(0)))
+      cap: Int = PruneCap): Seq[KeyPruneResult] = {
+    val fields = keys.schema.fields.toSeq
+    val projs = fields.map(f => i64Proj(keys.col(f.name), f.dataType))
+    // mode: how the sketch reads a column. 1 = key, then its i64
+    // projection; 2 = string, raw bytes (the IN-list literals AND the
+    // bounds); 3 = wide decimal; 0 = plain (IN-list only; no over-cap
+    // summary exists for the type)
+    val specs: Seq[(Int, Seq[org.apache.spark.sql.Column])] =
+      fields.zip(projs).map { case (f, proj) =>
+        val kcol = keys.col(f.name)
+        f.dataType match {
+          case _ if proj.isDefined => (1, Seq(kcol, proj.get))
+          case StringType => (2, Seq(kcol.cast(BinaryType)))
+          case d: DecimalType if d.precision > 18 => (3, Seq(kcol))
+          case _ => (0, Seq(kcol))
         }
-        a
-      },
-      (a, b) => a.merge(b))
-    if (sk.set != null) {
-      val raw = sk.set.toArray // Array[AnyRef]
-      val values: Array[Any] = raw.map {
-        case b: BytesKey => b.bytes: Any
-        case x => x: Any
       }
-      return KeyPruneResult(
-        Some(FilterPrune(org.apache.spark.sql.sources.In(name, values))),
-        sk.rows, Some(raw.length))
+    val modes = specs.map(_._1).toArray
+    val offsets = specs.scanLeft(0)(_ + _._2.size).toArray
+    val selected = keys.select(specs.flatMap(_._2).zipWithIndex
+      .map { case (c, i) => c.as(s"_k$i") }: _*)
+    val add = (a: Array[KeySketch], row: org.apache.spark.sql.Row) => {
+      var i = 0
+      while (i < a.length) {
+        val o = offsets(i)
+        if (!row.isNullAt(o)) modes(i) match {
+          case 1 =>
+            a(i).add(row.get(o))
+            a(i).boundL(row.getLong(o + 1))
+          case 2 =>
+            val b = row.getAs[Array[Byte]](o)
+            a(i).add(new BytesKey(b))
+            a(i).boundB(b)
+          case 3 =>
+            val d = row.getDecimal(o)
+            a(i).add(d)
+            a(i).boundD(d)
+          case _ => a(i).add(plainKey(row.get(o)))
+        }
+        i += 1
+      }
+      a
     }
-    val prune = mode match {
-      case 1 => Some(InKeyRange.fromBounds(nn.select(proj.get.as("k")), name,
-        sk.minL, sk.maxL, scale))
-      case 2 => Some(KeyBytesRange(name, sk.minB, sk.maxB, empty = false))
-      case 3 => Some(KeyDecimalRange(name,
-        sk.minD.setScale(scale).unscaledValue().toByteArray,
-        sk.maxD.setScale(scale).unscaledValue().toByteArray, scale,
-        empty = false))
-      case _ => None
+    val zero = Array.fill(fields.size)(new KeySketch(cap))
+    val sks = selected.queryExecution.executedPlan match {
+      case _: org.apache.spark.sql.execution.LocalTableScanExec =>
+        selected.collect().foldLeft(zero)(add)
+      case _ => selected.rdd.treeAggregate(zero)(add,
+        (a, b) => { a.indices.foreach(i => a(i).merge(b(i))); a })
     }
-    KeyPruneResult(prune, sk.rows, distinct = None)
+    fields.indices.map { i =>
+      val (f, sk) = (fields(i), sks(i))
+      val name = f.name
+      if (sk.set != null) {
+        val raw = sk.set.toArray // Array[AnyRef]
+        val values: Array[Any] = raw.map {
+          case b: BytesKey => b.bytes: Any
+          case x => x: Any
+        }
+        KeyPruneResult(Some(FilterPrune(org.apache.spark.sql.sources.In(name, values))),
+          sk.rows, Some(raw.length))
+      } else {
+        val scale = f.dataType match {
+          case d: DecimalType => d.scale
+          case _ => -1
+        }
+        val prune = modes(i) match {
+          case 1 =>
+            val nn = keys.filter(keys.col(name).isNotNull)
+            Some(InKeyRange.fromBounds(
+              nn.select(i64Proj(nn.col(name), f.dataType).get.as("k")), name,
+              sk.minL, sk.maxL, scale))
+          case 2 => Some(KeyBytesRange(name, sk.minB, sk.maxB, empty = false))
+          case 3 => Some(KeyDecimalRange(name,
+            sk.minD.setScale(scale).unscaledValue().toByteArray,
+            sk.maxD.setScale(scale).unscaledValue().toByteArray, scale,
+            empty = false))
+          case _ => None
+        }
+        KeyPruneResult(prune, sk.rows, distinct = None)
+      }
+    }
   }
 
   /** SQL-equality view of a plain (mode-0) key value for the distinct

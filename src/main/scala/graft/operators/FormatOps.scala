@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.format.ColumnEncoder
@@ -1192,60 +1193,113 @@ object FormatOps {
     * one-DML-per-batch case they were written under.
     *
     * File-granular: removals prune candidate files through
-    * [[graft.format.Stats.keyPrune]]'s typed summaries, so a batch
+    * [[graft.format.Stats.keyPruneFull]]'s typed summaries, so a batch
     * touches O(batch + overlapping files) of a 100 TB replica, and the
     * `idempotencyKey` (pass the micro-batch id) makes retried
-    * foreachBatch invocations exactly-once. */
+    * foreachBatch invocations exactly-once: a replay returns before any
+    * Spark job. */
   def applyCdcBatch(s: SparkSession, replicaDir: String, table: String,
       batch: DataFrame, keys: Seq[String],
       idempotencyKey: Option[String] = None): Unit = {
     require(keys.nonEmpty, "applyCdcBatch needs key columns")
-    val eff0 = batch.filter(col("_change_type") =!= "update_preimage")
-    val eff = if (eff0.columns.contains("_commit_version")) eff0
-      else eff0.withColumn("_commit_version", lit(0L))
-    // per-key winner as ONE hash aggregate (max_by), not a row_number
-    // window: the window shape exchanges AND sorts the full change batch
-    // (wide rows) per fold; max_by partial-aggregates map-side and never
-    // sorts. Ordering is the window's (_commit_version desc,
-    // _change_type asc) restated as a max: higher version wins, ties
-    // (unreachable per the capture contract — one DML = one version =
-    // one non-preimage change type per key — but kept faithful) go to
-    // the asc-least change type via the inverted rank.
-    val tieRank = when(col("_change_type") === "delete", 3)
-      .when(col("_change_type") === "insert", 2).otherwise(1)
-    val last = eff
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(struct(eff.columns.map(col).toSeq: _*),
-        struct(col("_commit_version"), tieRank.as("_tb"))).as("_w"))
-      .select(col("_w.*"))
-    val touched = last.select(keys.map(col): _*)
-    val adds = last.filter(col("_change_type") =!= "delete")
-      .drop("_change_type", "_commit_version")
-    // ONE map-only pass per key serves BOTH the candidate-file prune and
-    // the empty-batch check (profiled: a small commit's wall is Spark
-    // JOB COUNT, not metadata — the separate `isEmpty` probe was a whole
-    // job per micro-batch). Pruning on eff instead of `touched` is
-    // sound AND equally tight: row_number keeps every key, so the two
-    // key SETS are identical — but eff skips the window shuffle. An
-    // empty batch (or a preimage-only split half) must stay a TRUE
-    // no-op — without that, every empty trigger would churn a full
-    // carry generation of the replica. rows==0 on every key means no
-    // row carries a non-null key; only that rare shape (empty, or
-    // all-null-key inserts) pays the exact isEmpty probe.
-    val krs = keys.map(k =>
-      graft.format.Stats.keyPruneFull(eff0.select(col(k))))
-    if (krs.forall(_.rows == 0) &&
-        graft.sources.Prof.time("cdc.emptyCheck") { eff0.isEmpty }) return
-    val prune = {
-      val fs = krs.flatMap(_.prune)
-      Some(fs).filter(_.nonEmpty)
-    }
-    graft.sources.Generations.rewriteTable(s, replicaDir, table,
-      t => t.join(touched, keys, "left_anti")
-        .unionByName(adds.select(t.columns.map(col).toSeq: _*)),
-      prune, alwaysWrite = true, idempotencyKey = idempotencyKey)
-    ()
+    if (idempotencyKey.isDefined && graft.sources.Generations.liveRewriteTag(
+        s.sparkContext.hadoopConfiguration, replicaDir) == idempotencyKey) return
+    // The batch is evaluated ONCE ([[freeze]]); the empty check, the key
+    // prune, the fold and the rewrite all read that frozen copy. Read
+    // twice, a non-deterministic batch could prune on one key and write
+    // another: the old row's file is carried and the key duplicates.
+    val frozen = freeze(s, batch.filter(col("_change_type") =!= "update_preimage"))
+    try {
+      // an empty batch (or a preimage-only split half) must stay a TRUE
+      // no-op — without that, every empty trigger would churn a full
+      // carry generation of the replica
+      if (frozen.rows == 0) return
+      val eff = if (frozen.df.columns.contains("_commit_version")) frozen.df
+        else frozen.df.withColumn("_commit_version", lit(0L))
+      // per-key winner as ONE hash aggregate (max_by), not a row_number
+      // window: the window shape exchanges AND sorts the full change
+      // batch (wide rows) per fold; max_by partial-aggregates map-side
+      // and never sorts — and over a one-partition frozen batch it plans
+      // with no exchange at all. Ordering is the window's
+      // (_commit_version desc, _change_type asc) restated as a max:
+      // higher version wins, ties (unreachable per the capture contract —
+      // one DML = one version = one non-preimage change type per key —
+      // but kept faithful) go to the asc-least change type via the
+      // inverted rank.
+      val tieRank = when(col("_change_type") === "delete", 3)
+        .when(col("_change_type") === "insert", 2).otherwise(1)
+      val last = eff
+        .groupBy(keys.map(col): _*)
+        .agg(max_by(struct(eff.columns.map(col).toSeq: _*),
+          struct(col("_commit_version"), tieRank.as("_tb"))).as("_w"))
+        .select(col("_w.*"))
+      val touched = last.select(keys.map(col): _*)
+      val adds = last.filter(col("_change_type") =!= "delete")
+        .drop("_change_type", "_commit_version")
+      // the fold keeps every key, so pruning on the frozen batch's keys
+      // is exactly as tight as pruning on `touched`, in one pass over
+      // all key columns (on the driver when the batch was frozen there)
+      val prune = Some(graft.format.Stats.keyPruneFull(
+        frozen.sketchable.select(keys.map(col): _*)).flatMap(_.prune))
+        .filter(_.nonEmpty)
+      graft.sources.Generations.rewriteTable(s, replicaDir, table,
+        t => t.join(touched, keys, "left_anti")
+          .unionByName(adds.select(t.columns.map(col).toSeq: _*)),
+        prune, alwaysWrite = true, idempotencyKey = idempotencyKey)
+      ()
+    } finally frozen.release()
   }
+
+  /** A keyed fold's source, evaluated once by [[freeze]]. `df` is what
+    * every consumer reads. `local` holds the same rows as a plain
+    * `LocalRelation` frame when they were frozen on the driver, so
+    * [[graft.format.Stats.keyPruneFull]] sketches them there with no
+    * job; `rows` is their count, -1 once checkpointed. */
+  private final case class Frozen(df: DataFrame, local: Option[DataFrame], rows: Int) {
+    def sketchable: DataFrame = local.getOrElse(df)
+    def release(): Unit = releaseCheckpoint(df)
+  }
+
+  /** Evaluate a keyed fold's source ONCE and hand back a copy every later
+    * reader shares: the dup check, the change capture, the key prune and
+    * the rewrite would otherwise each re-evaluate it, and a
+    * non-deterministic or concurrently-changing source could surface a
+    * key in the rewrite that the prune never saw — that key's file is
+    * carried (never anti-joined) while the new row still inserts:
+    * silent duplicate keys (Delta materializes its MERGE source for
+    * exactly this reason).
+    *
+    * One `limit(cap + 1)` collect decides the shape. At most
+    * [[graft.format.Stats.PruneCap]] rows whose binary size fits
+    * `spark.sql.autoBroadcastJoinThreshold` (or no rows at all) stay on
+    * the driver as a one-partition `LocalRelation`: a per-key aggregate
+    * over it needs no exchange, and the adds land in one file. Anything
+    * larger is `localCheckpoint`ed; [[Frozen.release]] frees it. The
+    * rows stay the engine's `InternalRow`s end to end, so string bytes
+    * survive exactly, invalid UTF-8 included. */
+  private def freeze(s: SparkSession, source: DataFrame): Frozen =
+    graft.sources.Prof.time("cdc.freeze") {
+      val cap = graft.format.Stats.PruneCap
+      val head = GraftShim.collectInternal(source.limit(cap + 1))
+      val bytes = head.iterator.map(_.getSizeInBytes.toLong).sum
+      if (head.isEmpty ||
+          (head.length <= cap && bytes <= GraftShim.broadcastThreshold(s))) {
+        val local = GraftShim.localFrame(s, source.schema,
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(head))
+        Frozen(local.coalesce(1), Some(local), head.length)
+      } else Frozen(source.localCheckpoint(), None, -1)
+    }
+
+  /** Free a `localCheckpoint`'s storage blocks NOW — a long-lived CDC
+    * session folding in a loop would otherwise accumulate dead
+    * MEMORY_AND_DISK blocks until driver GC notices (Dataset.unpersist
+    * only serves CacheManager entries, so walk to the RDD itself). A
+    * frame with no checkpointed leaf is left alone. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    try df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ =>
+    } catch { case _: Exception => }
 
   /** Streaming change data feed: `readStream` over the write-time
     * capture log, making incremental consumers streaming-native —
@@ -1287,18 +1341,6 @@ object FormatOps {
 
   private def readTable(s: SparkSession, dir: String, table: String): DataFrame =
     s.read.format("graft").option("table", table).load(dir)
-
-  /** One key column's candidate-file prune predicate for a keyed DML:
-    * [[graft.format.Stats.keyPrune]]'s one-pass sketch. Small batches
-    * (≤1000 distinct values) yield an EXACT IN-list — the strongest
-    * prune, since both zone maps AND blooms can refute it per chunk,
-    * which matters on tables NOT clustered by the key. Past the cap the
-    * unbounded typed summaries take over (integral/date/ts/decimal
-    * bitmap, string byte range, wide-decimal unscaled range), so a
-    * million-key CDC fold still prunes file-granularly on clustered
-    * tables instead of silently degrading to a full rewrite. */
-  private def keyPrune(batch: DataFrame, k: String): Option[graft.format.Stats.Prune] =
-    graft.format.Stats.keyPrune(batch.select(col(k)))
 
   def updateWhere(s: SparkSession, dir: String, table: String,
       set: Map[String, org.apache.spark.sql.Column],
@@ -1349,34 +1391,21 @@ object FormatOps {
     * be key-unique (MERGE's "multiple source rows matched" error): with
     * duplicates, "replace the row for this key" has no deterministic
     * meaning, so the batch is validated (one small job, sized by the CDC
-    * batch, early-exits on the first duplicate) and refused loudly. */
+    * batch, early-exits on the first duplicate) and refused loudly. The
+    * source is evaluated exactly once ([[freeze]]): the checks, the
+    * capture and the rewrite all read the same rows. */
   def upsert(s: SparkSession, dir: String, table: String,
       source: DataFrame, keys: Seq[String],
       captureChanges: Boolean = false): Unit = {
     require(keys.nonEmpty, "upsert needs at least one key column")
-    // Materialize the batch ONCE before anything reads it: the dup
-    // check, the change capture, the prune-key collect and the rewrite's
-    // anti-join/union would otherwise each re-evaluate `source`,
-    // and a non-deterministic or concurrently-changing source could
-    // surface a key in the rewrite that the prune collect never saw —
-    // that key's file gets carried (never anti-joined) while the new
-    // row still inserts: silent duplicate keys. localCheckpoint severs
-    // the lineage, so every consumer below reads the same frozen rows
-    // (Delta materializes its MERGE source for exactly this reason).
-    val batch = source.localCheckpoint()
-    try upsertChecked(s, dir, table, batch, keys, captureChanges)
-    // release the checkpoint's storage blocks NOW — a long-lived CDC
-    // session upserting in a loop would otherwise accumulate dead
-    // MEMORY_AND_DISK blocks until driver GC notices (Dataset.unpersist
-    // only serves CacheManager entries, so walk to the RDD itself)
-    finally try batch.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ =>
-    } catch { case _: Exception => }
+    val frozen = freeze(s, source)
+    try upsertChecked(s, dir, table, frozen, keys, captureChanges)
+    finally frozen.release()
   }
 
   private def upsertChecked(s: SparkSession, dir: String, table: String,
-      batch: DataFrame, keys: Seq[String], captureChanges: Boolean): Unit = {
+      frozen: Frozen, keys: Seq[String], captureChanges: Boolean): Unit = {
+    val batch = frozen.df
     // ONE capped job serves both MERGE validation and candidate-file
     // pruning: per-key-tuple counts, collected while the distinct key
     // set fits the prune cap (the common CDC-batch case). Null-key rows
@@ -1384,7 +1413,7 @@ object FormatOps {
     // several of them are independent inserts, not an ambiguous
     // "replace" — and the anti-join below can never match them either,
     // so their values don't belong in the prune.
-    val cap = 1000
+    val cap = graft.format.Stats.PruneCap
     // string keys group (and later prune) through a BINARY cast: a
     // driver collect() of String values substitutes U+FFFD for invalid
     // UTF-8, and an IN-list built from those corrupted literals could
@@ -1418,7 +1447,7 @@ object FormatOps {
     var multiKeyGrouped: Option[Array[org.apache.spark.sql.Row]] = None
     val singleKeyPrune: Option[graft.format.Stats.KeyPruneResult] =
       if (keys.size == 1) // raw column: keyPruneFull does its own string cast
-        Some(graft.format.Stats.keyPruneFull(batch.select(col(keys.head))))
+        Some(graft.format.Stats.keyPruneFull(frozen.sketchable.select(col(keys.head))).head)
       else None
     singleKeyPrune match {
       case Some(res) =>
@@ -1468,10 +1497,7 @@ object FormatOps {
             when(col("_matched").isNotNull, "update_postimage").otherwise("insert"))
           .drop("_matched")
         captureTo(s, dir, marked.unionByName(preImages))
-      } finally try preImages.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ =>
-      } catch { case _: Exception => }
+      } finally releaseCheckpoint(preImages)
     }
     // File-granular COW: only files whose zone maps/blooms admit one of
     // the batch's keys can hold a row the anti-join removes — the rest
@@ -1498,7 +1524,8 @@ object FormatOps {
             graft.format.Stats.FilterPrune(
               org.apache.spark.sql.sources.In(k, deduped))
           }
-          case None => keys.flatMap(k => keyPrune(batch, k)) // per-column caps intact
+          case None => graft.format.Stats.keyPruneFull( // per-column caps intact
+            frozen.sketchable.select(keys.map(col): _*)).flatMap(_.prune)
         }
       }
       Some(fs).filter(_.nonEmpty)

@@ -21,6 +21,24 @@ trait SparkSpec extends AnyFunSuite {
     }
     df.collect().toSeq.map(r => norm(r).toString).sorted
   }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // events are delivered asynchronously: drain before attaching so
+    // earlier jobs are not counted, and after the body so none are missed
+    org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -10,6 +10,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.FormatOps
 
+/** A key generator that answers 5 on its first call and 150 after: a
+  * batch read twice sees two different keys. Static, so the count
+  * survives task deserialization in local mode. */
+object FlipKey {
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
+  def next(): Long = if (calls.getAndIncrement() == 0) 5L else 150L
+}
+
 /** Randomized end-to-end CDC replication: a seeded sequence of CAPTURED
   * upserts and deletes lands on a source table while a live change-feed
   * stream folds every batch into a replica (the q118 shape); the replica
@@ -189,5 +197,93 @@ class CdcFoldFuzzSpec extends SparkSpec {
     FormatOps.applyCdcBatch(spark, r5, "data",
       Seq((2L, 21L, "update_postimage")).toDF("id", "v", "_change_type"), Seq("id"))
     assert(state(r5) == Map(1L -> 10L, 2L -> 21L))
+  }
+
+  /** A replica of ids 0..199 (v = id) in two files split by id range. */
+  private def twoFileReplica(prefix: String): String = {
+    val repl = Files.createTempDirectory(prefix).toString + "/r"
+    spark.range(0, 200).select(col("id"), col("id").as("v"))
+      .repartitionByRange(2, col("id"))
+      .write.format("graft").mode("overwrite").save(repl)
+    repl
+  }
+
+  test("a non-deterministic batch is folded as evaluated once: no duplicate key") {
+    val repl = twoFileReplica("graft-nondet")
+    FlipKey.calls.set(0)
+    val flip = udf(() => FlipKey.next()).asNondeterministic()
+    // read once per consumer, the key prunes as 5 (file 1 only) and
+    // writes as 150: file 2's old row for 150 is carried beside the new
+    // one. Frozen, every consumer sees the same key.
+    val batch = spark.range(1).select(flip().as("id"), lit(-1L).as("v"),
+      lit("update_postimage").as("_change_type"), lit(1L).as("_commit_version"))
+    FormatOps.applyCdcBatch(spark, repl, "data", batch, Seq("id"))
+    val out = spark.read.format("graft").load(repl)
+    assert(out.count() == 200)
+    assert(out.select("id").distinct().count() == 200, "keys must stay unique")
+    assert(out.filter(col("v") === -1L).count() == 1)
+  }
+
+  test("a replayed idempotency key returns before any Spark job") {
+    val repl = twoFileReplica("graft-replay")
+    val batch = spark.range(10).select(col("id"), (col("id") + 1000).as("v"),
+      lit("update_postimage").as("_change_type"), lit(1L).as("_commit_version"))
+    FormatOps.applyCdcBatch(spark, repl, "data", batch, Seq("id"), Some("b-1"))
+    val (_, jobs) = jobsDuring(
+      FormatOps.applyCdcBatch(spark, repl, "data", batch, Seq("id"), Some("b-1")))
+    assert(jobs == 0, s"a replay ran $jobs jobs")
+    assert(spark.read.format("graft").load(repl).filter(col("v") >= 1000).count() == 10)
+  }
+
+  test("a fold at or under the cap runs at most 2 jobs and shuffles nothing") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{SparkPlan, adaptive}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+    val repl = twoFileReplica("graft-shape")
+    val batch = ((0L until 100L).map(id => (id, -id, "update_postimage", 1L)) ++
+      (100L until 150L).map(id => (id, 0L, "delete", 1L)) ++
+      (500L until 700L).map(id => (id, id, "insert", 1L)))
+      .toDF("id", "v", "_change_type", "_commit_version")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: adaptive.QueryStageExec => nodes(q.plan)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs = try jobsDuring(
+      FormatOps.applyCdcBatch(spark, repl, "data", batch, Seq("id"), Some("shape-1")))._2
+    finally spark.listenerManager.unregister(listener)
+    assert(jobs <= 2, s"a 350-row fold ran $jobs jobs")
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq.map(nodes)
+    assert(all.exists(_.exists(_.isInstanceOf[V2TableWriteExec])), "no write plan seen")
+    assert(!all.flatten.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      "the fold must plan with no exchange")
+    val out = spark.read.format("graft").load(repl)
+    assert(out.count() == 350)
+    assert(out.filter(col("id") < 100 && col("v") === -col("id")).count() == 100)
+  }
+
+  test("a change row holding invalid UTF-8 lands byte-exact") {
+    import spark.implicits._
+    val repl = Files.createTempDirectory("graft-badutf-cdc").toString + "/r"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      .coalesce(1).write.format("graft").mode("overwrite").save(repl)
+    val batch = Seq((1L, "update_postimage"), (3L, "insert")).toDF("id", "_change_type")
+      .select(col("id"), unhex(lit("C328FF")).cast("string").as("s"), col("_change_type"))
+    FormatOps.applyCdcBatch(spark, repl, "data", batch, Seq("id"))
+    val got = spark.read.format("graft").load(repl)
+      .select(col("id"), hex(col("s").cast("binary")).as("h")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(1L -> "C328FF", 2L -> "62", 3L -> "C328FF"))
   }
 }

@@ -535,6 +535,31 @@ class SelectiveRewriteSpec extends SparkSpec {
     assert(Stats.keyPrune(bigDoubles).isEmpty)
   }
 
+  test("keyPruneFull sketches every key column in one pass, on the driver for a local batch") {
+    import spark.implicits._
+    def inList(r: Stats.KeyPruneResult): Set[Any] = r.prune match {
+      case Some(Stats.FilterPrune(org.apache.spark.sql.sources.In(_, vs))) =>
+        vs.map {
+          case b: Array[Byte] => new String(b, "UTF-8")
+          case v => v
+        }.toSet
+      case other => fail(s"want IN-list, got $other")
+    }
+    val local = Seq[(java.lang.Long, String)]((1L, "a"), (2L, null), (null, "b"), (2L, "b"))
+      .toDF("k", "s")
+    val (res, jobs) = jobsDuring(Stats.keyPruneFull(local))
+    assert(jobs == 0, s"a local batch ran $jobs jobs")
+    assert(res.map(_.rows) == Seq(3L, 3L) && res.map(_.distinct) == Seq(Some(2), Some(2)))
+    assert(inList(res(0)) == Set(1L, 2L) && inList(res(1)) == Set("a", "b"))
+    // a distributed batch: both columns in ONE job
+    val wide = spark.range(0, 3000).selectExpr("id % 700 AS k",
+      "format_string('s%04d', id % 500) AS s")
+    val (res2, jobs2) = jobsDuring(Stats.keyPruneFull(wide))
+    assert(jobs2 == 1, s"two key columns took $jobs2 jobs")
+    assert(res2.map(_.distinct) == Seq(Some(700), Some(500)))
+    assert(inList(res2(1)).contains("s0499"))
+  }
+
   test("invalid-UTF-8 string keys: the IN-list prune never proves a wrong skip") {
     import spark.implicits._
     // a chunk whose string key is NOT valid UTF-8 (written via a binary
